@@ -1,4 +1,6 @@
+import contextlib
 import os
+from unittest import mock
 
 import pytest
 
@@ -84,6 +86,24 @@ def pytest_collection_modifyitems(config, items):
         nodeid = item.nodeid.split("tests/")[-1]
         if nodeid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+
+
+@pytest.fixture()
+def force_distributed():
+    """``with force_distributed(): ...`` runs every guarded operator in
+    its distributed regime: the guard constants they read at call time
+    (``util.LOCAL_GUARD``, ``util.BCAST_GUARD`` and negative_samples'
+    ``walks.RANK_GUARD``) are patched to 0 inside the block."""
+    from vivace_graph_v3_spark import util
+    from vivace_graph_v3_spark.operators import walks
+
+    @contextlib.contextmanager
+    def forced():
+        with mock.patch.multiple(util, LOCAL_GUARD=0, BCAST_GUARD=0), \
+                mock.patch.object(walks, "RANK_GUARD", 0):
+            yield
+
+    return forced
 
 
 @pytest.fixture(scope="session")

@@ -2,6 +2,8 @@
 answers: PageRank mass conservation + ordering, connected components on a
 disconnected forest, triangle counting, weighted/unweighted shortest paths."""
 
+from contextlib import nullcontext
+
 import pytest
 from pyspark.sql import types as T
 
@@ -42,22 +44,31 @@ def test_pagerank_mass_and_order(star):
     assert abs(pr["b"] - pr["c"]) < 1e-9                # symmetry
 
 
-def test_connected_components_forest(spark):
+def test_connected_components_forest(spark, force_distributed):
+    # both regimes: local union-find and the distributed dedup_clusters
+    # loop; the isolated vertex z keeps its singleton label in each
     g = _graph(spark, ["a", "b", "c", "d", "e", "f", "z"],
                [("a", "b", 1), ("b", "c", 1), ("d", "e", 1), ("e", "f", 1)])
-    comp = {r["id"]: r["comp"] for r in connected_components(g).collect()}
-    assert comp["a"] == comp["b"] == comp["c"] == "a"
-    assert comp["d"] == comp["e"] == comp["f"] == "d"
-    assert comp["z"] == "z"
+    for regime in (nullcontext(), force_distributed()):
+        with regime:
+            comp = {r["id"]: r["comp"]
+                    for r in connected_components(g).collect()}
+        assert comp["a"] == comp["b"] == comp["c"] == "a"
+        assert comp["d"] == comp["e"] == comp["f"] == "d"
+        assert comp["z"] == "z"
 
 
-def test_connected_components_long_chain_logarithmic(spark):
-    # 40-node chain must converge well inside 50 rounds (doubling trick)
+def test_connected_components_long_chain_logarithmic(spark,
+                                                     force_distributed):
+    # 40-node chain must converge well inside 50 rounds (doubling trick),
+    # in both regimes
     ids = [f"n{i:02d}" for i in range(40)]
     g = _graph(spark, ids, [(ids[i], ids[i + 1], 1) for i in range(39)])
-    comp = {r["id"]: r["comp"] for r in
-            connected_components(g, max_iter=10).collect()}
-    assert set(comp.values()) == {"n00"}
+    for regime in (nullcontext(), force_distributed()):
+        with regime:
+            comp = {r["id"]: r["comp"] for r in
+                    connected_components(g, max_iter=10).collect()}
+        assert set(comp.values()) == {"n00"} and len(comp) == 40
 
 
 def test_triangle_count(spark):
@@ -102,8 +113,9 @@ def test_shortest_paths_weighted_vs_hops(spark):
     assert wdist == {"a": 0.0, "b": 1.0, "c": 2.0}
 
 
-def test_kcore_sssp_stress_local_matches_distributed(spark):
-    """The local_guard driver-local finishes of k_core, shortest_paths
+def test_kcore_sssp_stress_local_matches_distributed(spark,
+                                                    force_distributed):
+    """The util.LOCAL_GUARD driver-local finishes of k_core, shortest_paths
     and landmark_stress must reproduce the distributed loops row for row
     (including budget-truncated runs) on a random graph."""
     import random
@@ -119,29 +131,31 @@ def test_kcore_sssp_stress_local_matches_distributed(spark):
     for kw in ({"max_iter": 50}, {"max_iter": 2}):
         loc = {r["id"]: r["degree"]
                for r in k_core(g, 3, **kw).collect()}
-        dist = {r["id"]: r["degree"]
-                for r in k_core(g, 3, local_guard=0, **kw).collect()}
+        with force_distributed():
+            dist = {r["id"]: r["degree"]
+                    for r in k_core(g, 3, **kw).collect()}
         assert loc == dist
     for kw in ({"weighted": False}, {"weighted": True},
                {"weighted": True, "max_iter": 2}):
         loc = {r["id"]: r["dist"]
                for r in shortest_paths(g, ["0", "7"], **kw).collect()}
-        dist = {r["id"]: r["dist"]
-                for r in shortest_paths(g, ["0", "7"], local_guard=0,
-                                        **kw).collect()}
+        with force_distributed():
+            dist = {r["id"]: r["dist"]
+                    for r in shortest_paths(g, ["0", "7"], **kw).collect()}
         assert loc == dist
     lms = ["0", "3", "5"]
     loc = {(r.lm, r.dist): (r.n_vertices, r.sum_sigma, r.sum_stress,
                             r.max_stress)
            for r in landmark_stress(g, lms, max_depth=4).collect()}
-    dist = {(r.lm, r.dist): (r.n_vertices, r.sum_sigma, r.sum_stress,
-                             r.max_stress)
-            for r in landmark_stress(g, lms, max_depth=4,
-                                     local_guard=0).collect()}
+    with force_distributed():
+        dist = {(r.lm, r.dist): (r.n_vertices, r.sum_sigma, r.sum_stress,
+                                 r.max_stress)
+                for r in landmark_stress(g, lms, max_depth=4).collect()}
     assert loc == dist
 
 
-def test_cc_and_temporal_ea_local_matches_distributed(spark):
+def test_cc_and_temporal_ea_local_matches_distributed(spark,
+                                                      force_distributed):
     """connected_components' union-find finish and
     temporal_earliest_arrival's DP replay must reproduce the
     distributed loops row for row (both hop-bounded and convergence
@@ -156,8 +170,8 @@ def test_cc_and_temporal_ea_local_matches_distributed(spark):
     edges = sorted({tuple(rng.sample(vids, 2)) for _ in range(70)})
     g = _graph(spark, vids, [(a, b, 1) for a, b in edges])
     loc = {r.id: r.comp for r in connected_components(g).collect()}
-    dist = {r.id: r.comp
-            for r in connected_components(g, local_guard=0).collect()}
+    with force_distributed():
+        dist = {r.id: r.comp for r in connected_components(g).collect()}
     assert loc == dist
     te = spark.createDataFrame(
         [(a, b, rng.randrange(100)) for a, b in edges]
@@ -168,16 +182,17 @@ def test_cc_and_temporal_ea_local_matches_distributed(spark):
         loc = {(r.seed, r.node): r.arrival
                for r in temporal_earliest_arrival(te, seeds,
                                                   **kw).collect()}
-        dist = {(r.seed, r.node): r.arrival
-                for r in temporal_earliest_arrival(te, seeds,
-                                                   local_guard=0,
-                                                   **kw).collect()}
+        with force_distributed():
+            dist = {(r.seed, r.node): r.arrival
+                    for r in temporal_earliest_arrival(te, seeds,
+                                                       **kw).collect()}
         assert loc == dist
 
 
-def test_landmark_bfs_local_matches_distributed(spark):
+def test_landmark_bfs_local_matches_distributed(spark, force_distributed):
     """landmark_closeness / landmark_eccentricity local finishes must
-    reproduce the distributed per-depth frontier loops row for row."""
+    reproduce the distributed per-depth frontier loops row for row; a
+    landmark that reaches nothing gets a NULL closeness in both."""
     import random
 
     from vivace_graph_v3_spark.operators.graph_algorithms import (
@@ -186,24 +201,24 @@ def test_landmark_bfs_local_matches_distributed(spark):
     rng = random.Random(47)
     vids = [str(i) for i in range(50)]
     edges = sorted({tuple(rng.sample(vids, 2)) for _ in range(120)})
-    g = _graph(spark, vids, [(a, b, 1) for a, b in edges])
-    lms = ["0", "9", "49"]
+    g = _graph(spark, vids + ["iso"], [(a, b, 1) for a, b in edges])
+    lms = ["0", "9", "49", "iso"]
     for und in (True, False):
         loc = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
                for r in landmark_closeness(g, lms, max_depth=4,
                                            undirected=und).collect()}
-        dist = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
-                for r in landmark_closeness(g, lms, max_depth=4,
-                                            undirected=und,
-                                            local_guard=0).collect()}
-        assert loc == dist
+        with force_distributed():
+            dist = {r.lm: (r.n_reached, r.sum_dist, r.closeness)
+                    for r in landmark_closeness(g, lms, max_depth=4,
+                                                undirected=und).collect()}
+        assert loc == dist and loc["iso"] == (1, 0, None)
         loc = {r.lm: (r.n_reached, r.ecc, r.diameter_lb)
                for r in landmark_eccentricity(g, lms, max_depth=5,
                                               undirected=und).collect()}
-        dist = {r.lm: (r.n_reached, r.ecc, r.diameter_lb)
-                for r in landmark_eccentricity(g, lms, max_depth=5,
-                                               undirected=und,
-                                               local_guard=0).collect()}
+        with force_distributed():
+            dist = {r.lm: (r.n_reached, r.ecc, r.diameter_lb)
+                    for r in landmark_eccentricity(g, lms, max_depth=5,
+                                                   undirected=und).collect()}
         assert loc == dist
 
 
@@ -235,7 +250,7 @@ def test_aggregate_messages(spark):
     assert nbr["c"] == ord("b") and nbr["b"] == ord("a")
 
 
-def test_random_walks_deterministic_and_valid(spark):
+def test_random_walks_deterministic_and_valid(spark, force_distributed):
     """Walks are a pure function of the graph: every emitted transition is
     a real edge, repeated generation is identical, and walks stop at
     vertices with no outgoing edges."""
@@ -263,10 +278,11 @@ def test_random_walks_deterministic_and_valid(spark):
     z = [r for r in r1 if r[0].startswith("z#")]
     assert z and all(s == 0 for _, s, _ in z)
     # round-10 differential pin: the broadcast-lazy regime (default under
-    # bcast_guard) emits exactly the per-step-checkpointed equi-join
-    # walks (bcast_guard=0 forces the past-guard path)
-    w3 = random_walks(g, walk_length=4, walks_per_node=3, bcast_guard=0)
-    r3 = {(r["walk_id"], r["step"], r["node"]) for r in w3.collect()}
+    # util.BCAST_GUARD) emits exactly the per-step-checkpointed
+    # equi-join walks of the past-guard path
+    with force_distributed():
+        w3 = random_walks(g, walk_length=4, walks_per_node=3)
+        r3 = {(r["walk_id"], r["step"], r["node"]) for r in w3.collect()}
     assert r1 == r3
 
 
@@ -302,21 +318,18 @@ def test_hits_star(star):
         assert 0.0 <= h <= 1.0 and 0.0 <= a <= 1.0
 
 
-def test_hits_bcast_matches_copartitioned(star):
-    # the broadcast-state regime (default below bcast_guard) must emit
-    # bit-identical scores to the past-guard co-partitioned formulation
-    # (bcast_guard=0 forces it) — the round-10 differential pin for the
-    # hits rewrite, including the out-degree-seeded first half-round
+def test_hits_bcast_matches_copartitioned(star, force_distributed):
+    # the broadcast-state regime (default below util.BCAST_GUARD) must
+    # emit bit-identical scores to the past-guard co-partitioned
+    # formulation — the round-10 differential pin for the hits rewrite,
+    # including the out-degree-seeded first half-round; max_iter=1
+    # exercises the seeded-final-round edge case in both paths
     from vivace_graph_v3_spark.operators.graph_algorithms import hits
-    fast = sorted(map(tuple, hits(star, max_iter=3).collect()))
-    dist = sorted(map(tuple, hits(star, max_iter=3,
-                                  bcast_guard=0).collect()))
-    assert fast == dist
-    # max_iter=1 exercises the seeded-final-round edge case in both paths
-    fast1 = sorted(map(tuple, hits(star, max_iter=1).collect()))
-    dist1 = sorted(map(tuple, hits(star, max_iter=1,
-                                   bcast_guard=0).collect()))
-    assert fast1 == dist1
+    for it in (3, 1):
+        fast = sorted(map(tuple, hits(star, max_iter=it).collect()))
+        with force_distributed():
+            dist = sorted(map(tuple, hits(star, max_iter=it).collect()))
+        assert fast == dist
 
 
 def test_common_neighbor_similarity(spark):
@@ -354,7 +367,8 @@ def test_neighbor_feature_rounds_by_hand(spark):
     assert got == {"a": 2.0, "b": 1.0, "c": 2.0}
 
 
-def test_negative_samples_deterministic_and_uniformish(spark):
+def test_negative_samples_deterministic_and_uniformish(spark,
+                                                      force_distributed):
     from vivace_graph_v3_spark.operators.walks import negative_samples
     pairs = spark.createDataFrame(
         [(f"c{i}", f"x{i}") for i in range(200)], ["center", "context"])
@@ -375,8 +389,9 @@ def test_negative_samples_deterministic_and_uniformish(spark):
     from collections import Counter
     counts = Counter(r.negative for r in out)
     assert max(counts.values()) < 800 / 50 * 3
-    # the distributed rank path (past rank_guard) draws identical samples
-    dist = negative_samples(pairs, verts, k=4, rank_guard=0).collect()
+    # the distributed rank path (past RANK_GUARD) draws identical samples
+    with force_distributed():
+        dist = negative_samples(pairs, verts, k=4).collect()
     assert {(r.center, r.context, r.neg_idx, r.negative) for r in out} \
         == {(r.center, r.context, r.neg_idx, r.negative) for r in dist}
 
@@ -505,8 +520,8 @@ def test_k_truss_two_triangles_and_pendant(spark):
     assert k_truss(g, 4).count() == 0                # cascade empties it
 
 
-def test_k_truss_local_matches_distributed(spark):
-    """The local_guard vectorized peel must emit exactly the distributed
+def test_k_truss_local_matches_distributed(spark, force_distributed):
+    """The util.LOCAL_GUARD vectorized peel must emit exactly the distributed
     loop's fixpoint — same surviving edges, same support values — on a
     random graph dense enough to cascade over several rounds."""
     import random
@@ -522,8 +537,9 @@ def test_k_truss_local_matches_distributed(spark):
     for k in (3, 5, 8):
         loc = {(r.src, r.dst): r.support
                for r in k_truss(g, k).collect()}
-        dist = {(r.src, r.dst): r.support
-                for r in k_truss(g, k, local_guard=0).collect()}
+        with force_distributed():
+            dist = {(r.src, r.dst): r.support
+                    for r in k_truss(g, k).collect()}
         assert loc == dist
 
 

@@ -1987,3 +1987,35 @@ def test_hard_negatives_seed_scan_bit_identical(spark, embeds):
     assert got.schema == spec.schema
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, spec.collect()))
+
+
+def test_hard_negatives_null_labels_match_sql_predicate(spark):
+    """A NULL label on either side drops the pair, as the SQL predicate
+    ``la != lb`` does (NULL != x is NULL): null-label anchors get no
+    negatives and null-label vectors are never mined as negatives."""
+    from pyspark.sql import Window
+    from vivace_graph_v3_spark.pipeline.dedup import cosine
+    from vivace_graph_v3_spark.pipeline.similarity import hard_negatives
+
+    rows = [(i, [float(i % 3 + 1), float(i % 5), 1.0],
+             [None, "a", "b", "a", None, "c"][i % 6]) for i in range(24)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label string")
+    a = emb.select(F.col("vec_id").alias("anchor_id"),
+                   F.col("embedding").alias("va"), F.col("label").alias("la"))
+    b = emb.select(F.col("vec_id").alias("negative_id"),
+                   F.col("embedding").alias("vb"), F.col("label").alias("lb"))
+    pairs = (a.join(b, (F.col("anchor_id") != F.col("negative_id"))
+                    & F.expr("la != lb"))
+             .select("anchor_id", "negative_id",
+                     F.round(cosine(F.col("va"), F.col("vb")), 6)
+                     .alias("cosine")))
+    w = Window.partitionBy("anchor_id").orderBy(
+        F.col("cosine").desc(), F.col("negative_id").asc())
+    spec = (pairs.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 2))
+    got = sorted(map(tuple, hard_negatives(emb, k=2).collect()))
+    assert got == sorted(map(tuple, spec.collect()))
+    null_ids = {r[0] for r in rows if r[2] is None}
+    assert got and not {r[0] for r in got} & null_ids
+    assert not {r[1] for r in got} & null_ids

@@ -1,0 +1,47 @@
+"""The registry's key order and oracle SQL are behaviour: a sampler runs
+the first 50 entries of queries(), and every entry is checked against
+its oracle. Both are pinned to the values they had before the rotation
+lists were folded into one explicit front list."""
+
+import hashlib
+import json
+
+from vivace_graph_v3_spark import entry_queries as eq
+
+FIRST_50 = [
+    "text_token_count", "traverse_bfs", "unique_var", "view_desc_paging",
+    "view_key_lookup", "view_range_paging", "view_reduce_groups",
+    "view_reduce_total", "temporal_reach_converged",
+    "classifier_cochran_q", "effect_size_quantity",
+    "confident_label_audit", "good_turing_source", "lang_mix_audit",
+    "curation_funnel", "embedding_top_eigen", "dedup_cluster_profile",
+    "stateful_late_audit", "geo_grid_dbscan", "bleu_pairs",
+    "classifier_mcnemar", "revenue_inequality", "dsir_select",
+    "ccnet_buckets", "ann_binary_hamming", "stateful_dedup",
+    "mink_prob_audit", "temporal_reach", "ann_lsh_recall",
+    "bagof_by_nation", "dedup_embedding", "dedup_embedding_recall",
+    "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard",
+    "dedup_simhash", "dedup_survivors", "degree_centrality",
+    "edge_join_2hop", "edge_weighted_filter", "events_hourly_window",
+    "events_latest_per_user", "findall_orders", "forall", "is_a_scan",
+    "is_arithmetic", "limit_skip", "lookup_vertex", "map_edges_scan",
+    "map_vertices_scan",
+]
+ORDER_SHA256 = (
+    "b42cefe7e6ad93ed8565e480763d8505cb93420277e03bd559fe70dc7042cc86")
+ORACLE_SHA256 = (
+    "6436506fda389e5825848a289296d37fba35d2f28e2798afda0d72c6530be068")
+
+
+def test_queries_order_pinned():
+    names = list(eq.queries())
+    assert len(names) == 362
+    assert names[:50] == FIRST_50
+    assert hashlib.sha256("\n".join(names).encode()).hexdigest() \
+        == ORDER_SHA256
+
+
+def test_oracle_sql_pinned():
+    items = list(eq.oracle_sql().items())
+    assert hashlib.sha256(json.dumps(items).encode()).hexdigest() \
+        == ORACLE_SHA256

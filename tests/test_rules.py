@@ -181,16 +181,16 @@ def test_cut_fail_idiom_fails_predicate(chain_graph):
     assert df.count() == 0
 
 
-def test_broadcast_guard_differential(chain_graph):
+def test_broadcast_guard_differential(chain_graph, force_distributed):
     """r10 bounded-relation regime: the broadcast-hinted semi-naive joins
-    (guard on) must produce the identical relation as the shuffle-join
-    regime (guard 0 — the 100 TB shape)."""
+    (under util.BCAST_GUARD) must produce the identical relation as the
+    shuffle-join regime (guard 0 — the 100 TB shape)."""
     def_rule("reach", ["?x", "?y"],
              [("next", "?x", "?y")],
              [("next", "?x", "?z"), ("reach", "?z", "?y")])
     on = {tuple(r) for r in
           RuleEvaluator(chain_graph).relation("reach").collect()}
-    off = {tuple(r) for r in
-           RuleEvaluator(chain_graph, broadcast_guard=0)
-           .relation("reach").collect()}
+    with force_distributed():
+        off = {tuple(r) for r in
+               RuleEvaluator(chain_graph).relation("reach").collect()}
     assert on == off and on

@@ -5,7 +5,8 @@ This probe measures the path PAST the guard, which is the formulation
 that actually runs at 100 TB where |V| dwarfs any broadcast budget:
 
 1. pagerank on the hot 10x graph (one hub key holding ~50% of edges)
-   with ``bcast_guard=0`` — forcing the shuffle contribution join —
+   with ``util.BCAST_GUARD`` patched to 0 — forcing the shuffle
+   contribution join —
    with AQE skew-join ON vs OFF, against the broadcast-path baseline.
 2. skew-split EVIDENCE on the representative rank-x-edges shuffle join:
    broadcast disabled, one src key holding 50% of the edge side; the
@@ -34,6 +35,7 @@ import shutil
 import sys
 import tempfile
 import time
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,6 +62,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from tools.skew_probe import build
+    from vivace_graph_v3_spark import util
     from vivace_graph_v3_spark.graph import load_tpch_graph
     from vivace_graph_v3_spark.operators.graph_algorithms import pagerank
     from vivace_graph_v3_spark.pipeline.dedup import (
@@ -122,14 +125,15 @@ def main() -> int:
             t, _ = _timed(lambda: pagerank(g, max_iter=10,
                                            tol=None).count())
             pr["broadcast_s"] = t
-            set_skew(True)
-            t, _ = _timed(lambda: pagerank(g, max_iter=10, tol=None,
-                                           bcast_guard=0).count())
-            pr["shuffle_aqe_s"] = t
-            set_skew(False)
-            t, _ = _timed(lambda: pagerank(g, max_iter=10, tol=None,
-                                           bcast_guard=0).count())
-            pr["shuffle_noskewjoin_s"] = t
+            with mock.patch.object(util, "BCAST_GUARD", 0):
+                set_skew(True)
+                t, _ = _timed(lambda: pagerank(g, max_iter=10,
+                                               tol=None).count())
+                pr["shuffle_aqe_s"] = t
+                set_skew(False)
+                t, _ = _timed(lambda: pagerank(g, max_iter=10,
+                                               tol=None).count())
+                pr["shuffle_noskewjoin_s"] = t
             set_skew(True)
             pr["fallback_vs_broadcast"] = round(
                 pr["shuffle_aqe_s"] / pr["broadcast_s"], 2)

@@ -22,21 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 from pyspark.sql import types as T
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.util import checkpoint_counted, checkpoint_rebased
-
-
-def _ckpt_n(df: DataFrame) -> tuple[DataFrame, int]:
-    """Checkpoint + count in one job (see util.checkpoint_counted): the
-    iterative loops below used to pay a separate ``.count()``/``.isEmpty()``
-    driver round-trip per round over the frame they had just checkpointed."""
-    return checkpoint_counted(df)
-
-
-def _ckpt_rebased_n(df: DataFrame) -> tuple[DataFrame, int]:
-    """Stats-reset (checkpoint_rebased) variant of :func:`_ckpt_n` for
-    frames the loop body re-joins every round."""
-    return checkpoint_counted(df, rebase=True)
 
 
 def _edge_pairs(graph: GraphStore, edge_type: str | None,
@@ -94,7 +82,6 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
              tol: float | None = 1.0e-4,
              sources: list | None = None,
              weighted: bool = False,
-             bcast_guard: int = 2_000_000,
              check_every: int = 1) -> DataFrame:
     """Standard damped PageRank over active edges. Returns (id, rank) with
     ranks summing to |V| (the classic normalization). Dangling mass is
@@ -126,7 +113,7 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     # stay dense instead of scheduling 32 near-empty tasks x 10 rounds at
     # small SF, while the count grows unbounded with |V| (at 100 TB this
     # lands at thousands of partitions, as it should).
-    vertices, n = _ckpt_n(vertices)
+    vertices, n = checkpoint_counted(vertices)
     nparts = max(4, min(int(graph.spark.conf.get(
         "spark.sql.shuffle.partitions", "32")) * 4, n // 100_000 + 1))
     # ``weighted``: contributions split by edge weight (w / Σw_out) instead
@@ -164,7 +151,7 @@ def pagerank(graph: GraphStore, *, edge_type: str | None = None,
     # 41 s vs 57 s for the shuffle join over 15M edges), so the guard sits
     # at 2M. Past it, fall back to the shuffle join — the formulation that
     # holds at 100 TB, where |V| dwarfs any broadcast budget.
-    bcast_state = n <= bcast_guard
+    bcast_state = n <= util.BCAST_GUARD
     _b = (lambda df: F.broadcast(df)) if bcast_state else (lambda df: df)
     # teleport vector (mass-|V| convention): uniform 1.0, or |V|/|S| on the
     # personalization sources and 0 elsewhere. Built as a function of the
@@ -306,110 +293,29 @@ def _contract_edges_locally(edges: DataFrame) -> DataFrame:
     return edges.mapInPandas(uf, schema="src string, dst string")
 
 
-def _local_cc_ids(edge_rows) -> dict:
-    """Driver-local exact undirected component labels: id -> min member
-    id, by union-find with path halving over a bounded edge list (the
-    ``local_guard`` seam in :func:`connected_components`). Min by the
-    same total order as the distributed F.least/F.min over the label
-    column (UTF-8 byte order == code-point order)."""
-    parent: dict = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edge_rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[rb] = ra
-    comp_min: dict = {}
-    for v in parent:
-        r = find(v)
-        m = comp_min.get(r)
-        if m is None or v < m:
-            comp_min[r] = v
-    return {v: comp_min[find(v)] for v in parent}
-
-
 def connected_components(graph: GraphStore, *, edge_type: str | None = None,
-                         max_iter: int = 50, check_every: int = 3,
-                         contract: bool = True,
-                         local_guard: int = 2_000_000) -> DataFrame:
-    """Undirected connected components by label propagation with the
-    large-star/small-star-style doubling trick: each round every vertex
-    adopts the min component id among itself and its neighbors' labels,
-    AND labels propagate transitively via label-of-label joins — so chain
-    graphs converge in O(log diameter) rounds, not O(diameter).
+                         max_iter: int = 50) -> DataFrame:
+    """Undirected connected components: returns (id, comp) for every
+    vertex, comp = min vertex id of its component.
 
-    With ``contract`` (default), edges are first collapsed per-partition by
-    a local union-find, so the iterative loop shuffles a spanning mapping of
-    size O(|V|) rather than the raw O(|E|) edge list — the component labels
-    (min vertex id per component) are identical either way."""
-    edges = _edge_pairs(graph, edge_type, undirected=True)
-    if contract:
-        edges = _contract_edges_locally(edges)
-        # the mapping is directed id->root; propagation needs both directions
-        edges = edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    edges = edges.persist()
-    labels = (graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
-              .withColumn("comp", F.col("id")))
-    labels = labels.localCheckpoint(eager=True)
-    n_e = edges.count()
-    if n_e <= local_guard:
-        # bounded (the contracted mapping is O(|V|) anyway): settle every
-        # component with one driver union-find — the same local-finish
-        # discipline as SCC/k-truss/k-core; vertices outside the edge
-        # list keep their singleton label
-        try:
-            comp = _local_cc_ids((r["src"], r["dst"])
-                                 for r in edges.collect())
-            id_f = labels.schema["id"]
-            lab_df = labels.sparkSession.createDataFrame(
-                list(comp.items()),
-                T.StructType([id_f, T.StructField("c2", id_f.dataType)]))
-            return (labels.join(F.broadcast(lab_df), "id", "left")
-                    .select("id", F.coalesce(F.col("c2"), F.col("comp"))
-                            .alias("comp")))
-        finally:
-            edges.unpersist()
-    try:
-        for it in range(max_iter):
-            # neighbor min
-            nbr = (edges.join(labels.withColumnRenamed("id", "dst")
-                              .withColumnRenamed("comp", "ncomp"), "dst")
-                   .groupBy("src").agg(F.min("ncomp").alias("nmin"))
-                   .withColumnRenamed("src", "id"))
-            stepped = (labels.join(nbr, "id", "left")
-                       .select("id", F.least(F.col("comp"),
-                                             F.coalesce(F.col("nmin"),
-                                                        F.col("comp"))).alias("comp")))
-            # pointer-jumping: comp <- label(comp)  (log-round convergence)
-            lab2 = stepped.select(F.col("id").alias("comp"),
-                                  F.col("comp").alias("comp2"))
-            jumped = (stepped.join(lab2, "comp")
-                      .select("id", F.least(F.col("comp"),
-                                            F.col("comp2")).alias("comp")))
-            jumped = jumped.localCheckpoint(eager=True)
-            # the convergence probe is a full diff join — amortize it over
-            # check_every rounds (an extra round of converged iteration is
-            # cheaper than a probe per round)
-            if (it + 1) % check_every == 0 or it == max_iter - 1:
-                changed = (jumped.join(labels.withColumnRenamed("comp", "old"),
-                                       "id")
-                           .filter(F.col("comp") != F.col("old")).limit(1))
-                labels = jumped
-                if changed.isEmpty():
-                    break
-            else:
-                labels = jumped
-    finally:
-        edges.unpersist()
-    return labels
+    Edges are first collapsed per partition by a local union-find
+    (:func:`_contract_edges_locally`), so the component kernel sees a
+    spanning mapping of size O(|V|) rather than the raw O(|E|) edge list;
+    the labels are identical either way. The kernel is
+    :func:`~vivace_graph_v3_spark.pipeline.dedup.dedup_clusters`: one
+    driver union-find under ``util.LOCAL_GUARD`` mapping rows, distributed
+    min-label propagation with pointer jumping past it (chains converge in
+    O(log diameter) rounds, at most ``max_iter``). Vertices outside the
+    edge list keep their singleton label."""
+    from vivace_graph_v3_spark.pipeline.dedup import dedup_clusters
+
+    mapping = _contract_edges_locally(_edge_pairs(graph, edge_type))
+    labels = (dedup_clusters(mapping, id_a="src", id_b="dst",
+                             max_iter=max_iter)
+              .withColumnRenamed("cluster", "c2"))
+    return (graph.scan_vertices(columns=["id"]).select("id").dropDuplicates()
+            .join(labels, "id", "left")
+            .select("id", F.coalesce(F.col("c2"), F.col("id")).alias("comp")))
 
 
 def cc_incremental(labels: DataFrame, new_edges: DataFrame, *,
@@ -424,7 +330,7 @@ def cc_incremental(labels: DataFrame, new_edges: DataFrame, *,
        broadcasts against a bucketed label layout);
     2. collapse the resulting (comp_a, comp_b) LABEL graph with
        :func:`~vivace_graph_v3_spark.pipeline.dedup.dedup_clusters`
-       (driver union-find under its 2M-pair guard, distributed
+       (driver union-find under ``util.LOCAL_GUARD`` pairs, distributed
        min-label + pointer jumping past it);
     3. apply the old->merged map to the label table with ONE broadcast
        left join (the map has at most one row per touched component).
@@ -534,15 +440,52 @@ def _edge_support(e: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("support"))
 
 
+def _factorize(srcs, dsts, extra=()):
+    """The id-factorize step shared by the driver-local numpy kernels:
+    dense codes for the parallel endpoint arrays ``srcs``/``dsts`` and for
+    ``extra`` ids (roots, landmarks, seeds) over ONE vocabulary. Returns
+    (u, v, extra_codes, vocab) with int64 ``u``/``v`` and
+    ``vocab[code]`` the original id."""
+    import numpy as np
+    import pandas as pd
+
+    m = len(srcs)
+    codes, vocab = pd.factorize(np.concatenate([
+        np.asarray(srcs, dtype=object), np.asarray(dsts, dtype=object),
+        np.asarray(extra, dtype=object)]))
+    return (codes[:m].astype(np.int64), codes[m:2 * m].astype(np.int64),
+            codes[2 * m:], np.asarray(vocab, dtype=object))
+
+
+def _csr_gather(src_sorted, nv: int):
+    """CSR frontier gather over an edge list sorted by source code:
+    returns ``gather(front)``, the positions (in that sorted order) of
+    every out-edge of the ``front`` vertices, grouped by frontier
+    vertex in ``front`` order."""
+    import numpy as np
+
+    od = np.bincount(src_sorted, minlength=nv)
+    starts = np.cumsum(od) - od
+
+    def gather(front):
+        cnts = od[front]
+        base = np.repeat(starts[front], cnts)
+        return (base + np.arange(len(base))
+                - np.repeat(np.cumsum(cnts) - cnts, cnts))
+
+    return gather
+
+
 def _local_truss(srcs, dsts, sup_min: int, *,
                  max_triangles: int = 50_000_000,
                  max_wedges: int = 256_000_000, threads: int = 8):
     """Driver-local exact k-truss peel over a bounded canonical edge list
-    (the ``local_guard`` seam in :func:`k_truss`). One vectorized triangle
-    enumeration — degree-ordered orientation so hub wedge fan-out stays
-    bounded, processed in chunks across a thread pool (the numpy kernels
-    release the GIL, so chunks genuinely parallelize) with int32 scratch
-    so the pass is bandwidth-light — yields per-edge support plus the
+    (the ``util.LOCAL_GUARD`` seam in :func:`k_truss`). One vectorized
+    triangle enumeration — degree-ordered orientation so hub wedge
+    fan-out stays bounded, processed in chunks across a thread pool (the
+    numpy kernels release the GIL, so chunks genuinely parallelize) with
+    int32 scratch so the pass is bandwidth-light — yields per-edge
+    support plus the
     triangle side lists; the cascade then peels with incremental support
     maintenance: support(edge) always equals its triangle count within
     the surviving subgraph, which is exactly the per-round recompute of
@@ -553,19 +496,13 @@ def _local_truss(srcs, dsts, sup_min: int, *,
     exceed the local caps (the caller keeps the distributed loop as the
     at-scale fallback)."""
     import numpy as np
-    import pandas as pd
     from concurrent.futures import ThreadPoolExecutor
 
     m = len(srcs)
     if m == 0:
         return []
-    codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object)]))
-    u = codes[:m].astype(np.int64)
-    v = codes[m:].astype(np.int64)
-    vocab = np.asarray(_vocab, dtype=object)
-    nv = int(len(vocab))
+    u, v, _, vocab = _factorize(srcs, dsts)
+    nv = len(vocab)
     deg = np.bincount(u, minlength=nv) + np.bincount(v, minlength=nv)
     # orient each edge away from its (degree, code)-smaller endpoint:
     # every triangle then has exactly one center whose two sides both
@@ -659,7 +596,7 @@ def _local_truss(srcs, dsts, sup_min: int, *,
 
 
 def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
-            max_iter: int = 30, local_guard: int = 2_000_000) -> DataFrame:
+            max_iter: int = 30) -> DataFrame:
     """k-truss (Cohen 2008): the maximal subgraph in which every edge
     participates in at least k-2 triangles — the cohesive-subgraph
     refinement of :func:`k_core` (every k-truss is inside the (k-1)-core,
@@ -672,7 +609,7 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     set (two endpoint-keyed shuffles, AQE-skew-splittable — never
     vertex-pair all-pairs) plus a side aggregate; the edge set shrinks
     monotonically so rounds get cheaper. Rounds are checkpoint-truncated
-    like the other iterative operators. ``local_guard``: once the active
+    like the other iterative operators. ``util.LOCAL_GUARD``: once the active
     edge set fits under this bound, the remaining cascade is settled by
     one driver-local vectorized enumeration + incremental peel
     (:func:`_local_truss`) — the same bounded-local-finish discipline as
@@ -684,7 +621,7 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     last resort when the bounded edge set is still so dense that its
     triangle list would exceed the local memory cap)."""
     sup_min = k - 2
-    e, n_edges = _ckpt_n(
+    e, n_edges = checkpoint_counted(
         _edge_pairs(graph, edge_type, undirected=True)
         .filter(F.col("src") < F.col("dst"))
         .dropDuplicates(["src", "dst"]))
@@ -692,9 +629,9 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
     converged = False
     local_tried = False
     for _ in range(max_iter):
-        if n_edges <= local_guard and not local_tried:
+        if n_edges <= util.LOCAL_GUARD and not local_tried:
             local_tried = True
-            pdf = e.toPandas()       # bounded by local_guard rows (Arrow)
+            pdf = e.toPandas()       # bounded by the guard (Arrow)
             rows = _local_truss(pdf["src"].to_numpy(dtype=object),
                                 pdf["dst"].to_numpy(dtype=object), sup_min)
             if rows is not None:
@@ -703,7 +640,8 @@ def k_truss(graph: GraphStore, k: int, *, edge_type: str | None = None,
                     T.StructField("support", T.LongType())])
                 return e.sparkSession.createDataFrame(rows, schema)
         sup = _edge_support(e)
-        kept, n_next = _ckpt_n(sup.filter(F.col("support") >= sup_min))
+        kept, n_next = checkpoint_counted(
+            sup.filter(F.col("support") >= sup_min))
         e = kept.select("src", "dst")
         if n_next == n_edges:
             converged = True   # kept == e, so sup describes the fixpoint
@@ -769,7 +707,7 @@ def degree_assortativity(graph: GraphStore, *,
 
 def _local_sssp(srcs, dsts, ws, root_ids, max_iter: int):
     """Driver-local exact frontier Bellman-Ford over a bounded edge list
-    (the ``local_guard`` seam in :func:`shortest_paths`). Replays the
+    (the ``util.LOCAL_GUARD`` seam in :func:`shortest_paths`). Replays the
     distributed loop round for round — per round, candidates come only
     from the frontier improved last round, the per-destination minimum
     is taken over the identical candidate multiset, and the loop runs
@@ -777,19 +715,11 @@ def _local_sssp(srcs, dsts, ws, root_ids, max_iter: int):
     including the float dists of the weighted variant, is bit-identical
     to the distributed result."""
     import numpy as np
-    import pandas as pd
 
-    m = len(srcs)
-    codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object),
-                        np.asarray(root_ids, dtype=object)]))
-    u = codes[:m].astype(np.int64)
-    v = codes[m:2 * m].astype(np.int64)
-    r = np.unique(codes[2 * m:])
+    u, v, root_codes, vocab = _factorize(srcs, dsts, root_ids)
+    r = np.unique(root_codes)
     w = np.asarray(ws, dtype=np.float64)
-    vocab = np.asarray(_vocab, dtype=object)
-    nv = int(len(vocab))
+    nv = len(vocab)
     dist = np.full(nv, np.inf)
     dist[r] = 0.0
     frontier = np.zeros(nv, dtype=bool)
@@ -811,13 +741,12 @@ def _local_sssp(srcs, dsts, ws, root_ids, max_iter: int):
 
 def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
                    weighted: bool = False, max_iter: int = 50,
-                   direction: str = "out",
-                   local_guard: int = 2_000_000) -> DataFrame:
+                   direction: str = "out") -> DataFrame:
     """Single/multi-source shortest paths (hop count, or summed edge weight
     with ``weighted``): distributed Bellman-Ford. Returns (id, dist) for
     reachable vertices. Frontier-based: only improved vertices relax their
     neighbors next round, so rounds touch the active frontier, not all V.
-    ``local_guard``: when the edge list fits under this bound, the whole
+    ``util.LOCAL_GUARD``: when the edge list fits under this bound, the whole
     relaxation is replayed driver-locally (:func:`_local_sssp`, the SCC /
     k-truss bounded-local-finish discipline) — long chains mean many tiny
     sequential rounds, which is exactly where per-round job latency
@@ -836,7 +765,7 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
     else:
         dist = spark.createDataFrame([(r,) for r in roots], ["id"])
     n_e = edges.count()
-    if n_e <= local_guard:
+    if n_e <= util.LOCAL_GUARD:
         try:
             epdf = edges.toPandas()
             rpdf = dist.toPandas()
@@ -858,7 +787,7 @@ def shortest_paths(graph: GraphStore, roots, *, edge_type: str | None = None,
                     .select(F.col("dst").alias("id"),
                             (F.col("dist") + F.col("w")).alias("nd"))
                     .groupBy("id").agg(F.min("nd").alias("nd")))
-            improved, n_imp = _ckpt_n(
+            improved, n_imp = checkpoint_counted(
                 cand.join(dist, "id", "left")
                 .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
                 .select("id", F.col("nd").alias("dist")))
@@ -918,25 +847,19 @@ def label_propagation(graph: GraphStore, *, edge_type: str | None = None,
 def _local_kcore(srcs, dsts, k: int, max_iter: int):
     """Driver-local exact k-core peel over a bounded doubled-directed
     edge list (each undirected edge present in both orientations, the
-    ``local_guard`` seam in :func:`k_core`). Round r removes every
+    ``util.LOCAL_GUARD`` seam in :func:`k_core`). Round r removes every
     vertex whose degree within the round-r surviving set is under ``k``
     — the identical per-round rule as the distributed loop, bounded by
     the same ``max_iter`` budget, so the output (id, degree-in-core)
     matches row for row. Only valid for k >= 1 (the caller checks):
     vertices outside the edge list can then never survive."""
     import numpy as np
-    import pandas as pd
 
     m = len(srcs)
     if m == 0:
         return []
-    codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object)]))
-    u = codes[:m].astype(np.int64)
-    v = codes[m:].astype(np.int64)
-    vocab = np.asarray(_vocab, dtype=object)
-    nv = int(len(vocab))
+    u, v, _, vocab = _factorize(srcs, dsts)
+    nv = len(vocab)
     alive_v = np.ones(nv, dtype=bool)
     alive_e = np.ones(m, dtype=bool)
     for _ in range(max_iter):
@@ -952,7 +875,7 @@ def _local_kcore(srcs, dsts, k: int, max_iter: int):
 
 
 def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
-           max_iter: int = 50, local_guard: int = 2_000_000) -> DataFrame:
+           max_iter: int = 50) -> DataFrame:
     """k-core: the maximal subgraph where every vertex has degree >= k,
     found by iterative peeling (remove under-degree vertices until fixpoint;
     the k-core is unique, so peeling order is irrelevant — no ordering
@@ -960,7 +883,7 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
 
     Each round is one degree aggregation over edges semi-joined to the
     surviving set; the surviving set shrinks monotonically, so rounds get
-    cheaper as they proceed. ``local_guard``: when the deduped edge list
+    cheaper as they proceed. ``util.LOCAL_GUARD``: when the deduped edge list
     fits under this bound (and k >= 1), the whole cascade is settled by
     one driver-local vectorized peel (:func:`_local_kcore`) — the same
     bounded-local-finish discipline as SCC and k-truss; the sequential
@@ -973,7 +896,7 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
              .dropDuplicates(["src", "dst"]).persist())
     if k >= 1:
         n_e = edges.count()
-        if n_e <= local_guard:
+        if n_e <= util.LOCAL_GUARD:
             try:
                 pdf = edges.select("src", "dst").toPandas()
                 rows = _local_kcore(pdf["src"].to_numpy(dtype=object),
@@ -985,8 +908,8 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
                 return graph.spark.createDataFrame(rows, schema)
             finally:
                 edges.unpersist()
-    alive, n_alive = _ckpt_n(graph.scan_vertices(columns=["id"])
-                             .select("id").dropDuplicates())
+    alive, n_alive = checkpoint_counted(
+        graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
     deg = None
     converged = False
     try:
@@ -999,7 +922,7 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
             deg = (live_edges.groupBy("src")
                    .agg(F.count(F.lit(1)).alias("degree"))
                    .withColumnRenamed("src", "id"))
-            survivors, n_next = _ckpt_n(
+            survivors, n_next = checkpoint_counted(
                 deg.filter(F.col("degree") >= k).select("id"))
             alive = survivors
             if n_next == n_alive:
@@ -1031,7 +954,7 @@ def k_core(graph: GraphStore, k: int, *, edge_type: str | None = None,
 
 
 def hits(graph: GraphStore, *, edge_type: str | None = None,
-         max_iter: int = 5, bcast_guard: int = 2_000_000) -> DataFrame:
+         max_iter: int = 5) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) over active edges:
     alternating hub = sum of pointed-to authorities, authority = sum of
     incoming hubs. Returns (id, hub, auth) for every vertex, each score
@@ -1044,7 +967,7 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     can drift between engines. Scores stay well inside double range for
     any realistic iteration count (growth ~ lambda_max^rounds).
 
-    Scale shape — two regimes behind ``bcast_guard`` (the pagerank
+    Scale shape — two regimes behind ``util.BCAST_GUARD`` (the pagerank
     discipline). Below the guard (|V| bounded), the score state is
     broadcast into each half-round's join against ONE checkpointed edge
     copy: no edge co-partitioning at all, one |V|-bounded aggregate
@@ -1060,8 +983,8 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     checkpointed in that regime. Reference analog: none — the reference
     exposes traverse/recursive rules but no eigenvector scores; cited as
     beyond-ref alongside pagerank (SURVEY.md §2.3)."""
-    vertices, n_v = _ckpt_n(graph.scan_vertices(columns=["id"])
-                            .select("id").dropDuplicates())
+    vertices, n_v = checkpoint_counted(
+        graph.scan_vertices(columns=["id"]).select("id").dropDuplicates())
     # Partition count sized off the data (same ~1M-edge-rows-per-task rule
     # as pagerank's edge frame, derived from |V| at avg degree ~10) rather
     # than pinned to spark.sql.shuffle.partitions: each half-round's
@@ -1082,9 +1005,9 @@ def hits(graph: GraphStore, *, edge_type: str | None = None,
     # trade pagerank makes; memory holds 2x edges, which on a cluster is
     # storage-tier disk/memory, not driver.
     ob_h, ob_a = Observation(), Observation()
-    if n_v <= bcast_guard:
+    if n_v <= util.BCAST_GUARD:
         # bounded-state regime (same discipline as pagerank's
-        # bcast_guard, measured same-window 7.46 -> 4.49 s at sf0.1,
+        # broadcast guard, measured same-window 7.46 -> 4.49 s at sf0.1,
         # bit-identical output): the |V|-row score state is BROADCAST to
         # each half-round's join, so the edge list is never
         # co-partitioned at all — one checkpointed copy streams map-side
@@ -1271,112 +1194,70 @@ def walk_census(graph: GraphStore, *, edge_type: str | None = None,
 
 def _local_landmark_levels(srcs, dsts, landmarks, max_depth: int):
     """Driver-local BFS level sizes per landmark over a bounded edge
-    list (the ``local_guard`` seam of :func:`landmark_closeness` /
-    :func:`landmark_eccentricity`): the same per-depth
-    frontier-join/anti-join semantics as the distributed loops —
-    frontier expands along directed arcs, a vertex joins the level of
-    its FIRST discovery — vectorized as CSR gathers. Returns
-    [(lm, dist, n_vertices), ...] in (landmark, depth) order."""
+    list (the ``util.LOCAL_GUARD`` regime of :func:`_landmark_levels`):
+    the same per-depth frontier-join/anti-join semantics as the
+    distributed loop — frontier expands along directed arcs, a vertex
+    joins the level of its FIRST discovery — vectorized as CSR gathers.
+    Returns [(lm, dist, n_vertices), ...] in (landmark, depth) order."""
     import numpy as np
-    import pandas as pd
 
-    m = len(srcs)
-    codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object),
-                        np.asarray(landmarks, dtype=object)]))
-    u = codes[:m].astype(np.int64)
-    v = codes[m:2 * m].astype(np.int64)
-    lmc = codes[2 * m:]
-    nv = int(len(_vocab))
+    u, v, lmc, vocab = _factorize(srcs, dsts, landmarks)
+    nv = len(vocab)
     order = np.argsort(u, kind="stable")
     gv = v[order]
-    od = np.bincount(u, minlength=nv)
-    ends = np.cumsum(od)
-    starts = ends - od
+    gather = _csr_gather(u[order], nv)
     out = []
-    for li, lm in enumerate(landmarks):
-        lc = int(lmc[li])
+    for lm, lc in zip(landmarks, lmc):
         dist = np.full(nv, -1, dtype=np.int64)
         dist[lc] = 0
         level = np.array([lc], dtype=np.int64)
         out.append((lm, 0, 1))
         for depth in range(1, max_depth + 1):
-            cnts = od[level]
-            tot = int(cnts.sum())
-            if tot == 0:
-                break
-            base = np.repeat(starts[level], cnts)
-            offs = (np.arange(tot)
-                    - np.repeat(np.cumsum(cnts) - cnts, cnts))
-            nbr = gv[base + offs]
+            nbr = gv[gather(level)]
             nbr = nbr[dist[nbr] < 0]
             if not len(nbr):
                 break
-            nxt = np.unique(nbr)
-            dist[nxt] = depth
-            out.append((lm, depth, int(len(nxt))))
-            level = nxt
+            level = np.unique(nbr)
+            dist[level] = depth
+            out.append((lm, depth, int(len(level))))
     return out
 
 
-def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
-                       edge_type: str | None = None, max_depth: int = 6,
-                       undirected: bool = True,
-                       local_guard: int = 2_000_000) -> DataFrame:
-    """Closeness centrality of ``landmarks`` (Freeman 1979), depth-bounded:
-    closeness(l) = (reached - 1) / sum of BFS distances over the vertices
-    l reaches within ``max_depth`` hops. Exact closeness needs all-pairs
-    distances; production graphs estimate it from k sampled landmarks
-    (the Eppstein-Wang 2004 sampling shape) — here the landmarks ARE the
-    queried vertices, so the result is exact for them.
+def _landmark_levels(graph: GraphStore, landmarks: list[str],
+                     edge_type: str | None, max_depth: int,
+                     undirected: bool) -> DataFrame:
+    """Depth-bounded BFS level sizes from each landmark: (lm, dist,
+    n_vertices), one row per non-empty level, the landmark itself at
+    dist 0. The frame :func:`landmark_closeness` and
+    :func:`landmark_eccentricity` aggregate.
 
     Frontier BFS carrying (lm, id): each round joins only the ACTIVE
-    frontier against the src-partitioned edge list, anti-joins the
-    visited set, and checkpoints — k landmarks multiply the frontier
-    width, never the graph; rounds are bounded by max_depth. The
-    closeness ratio uses the integer round-half-up recipe (engine-exact
-    6 decimals). Returns (lm, n_reached, sum_dist, closeness) where
-    n_reached counts the landmark itself. ``local_guard``: under the
-    bound the per-depth frontier rounds run as one driver-local BFS
+    frontier against the edge list, anti-joins the visited set, and
+    checkpoints — k landmarks multiply the frontier width, never the
+    graph; rounds are bounded by max_depth. Under ``util.LOCAL_GUARD``
+    distinct undirected edges the rounds run as one driver-local BFS
     (:func:`_local_landmark_levels`, the SCC/k-truss local-finish
-    discipline) — identical levels, exact integer aggregates.
-    """
+    discipline) with identical levels."""
     spark = graph.spark
     edges = (_edge_pairs(graph, edge_type, undirected=undirected)
              .select("src", "dst").dropDuplicates().persist())
-    n_e = edges.count()
-    # guard on DISTINCT UNDIRECTED edges (the SCC/k-truss memory class);
-    # the arc list carries each edge twice when undirected
-    if n_e <= (local_guard * 2 if undirected else local_guard):
-        try:
+    try:
+        n_e = edges.count()
+        # the arc list carries each edge twice when undirected
+        if n_e <= util.LOCAL_GUARD * (2 if undirected else 1):
             epdf = edges.toPandas()
             levels = _local_landmark_levels(
                 epdf["src"].to_numpy(dtype=object),
                 epdf["dst"].to_numpy(dtype=object),
                 list(landmarks), max_depth)
-            acc: dict = {}
-            for lm, d, n in levels:
-                r, s = acc.get(lm, (0, 0))
-                acc[lm] = (r + n, s + d * n)
-            rows = []
-            for lm, (r, s) in acc.items():
-                # mirror the expression: long div -> NULL on zero divisor
-                c = (float(((r - 1) * 2000000 + s) // (s * 2)) / 1e6
-                     if s else None)
-                rows.append((lm, r, s, c))
-            schema = ("lm string, n_reached long, sum_dist long, "
-                      "closeness double")
-            return spark.createDataFrame(rows, schema)
-        finally:
-            edges.unpersist()
-    visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
-                                     "lm string, id string, dist int")
-               .localCheckpoint(eager=True))
-    frontier = visited
-    try:
+            return spark.createDataFrame(
+                levels, "lm string, dist int, n_vertices long")
+        visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
+                                         "lm string, id string, dist int")
+                   .localCheckpoint(eager=True))
+        frontier = visited
         for depth in range(1, max_depth + 1):
-            nxt, n_nxt = _ckpt_n(
+            nxt, n_nxt = checkpoint_counted(
                 frontier.join(edges, frontier["id"] == edges["src"])
                 .select("lm", F.col("dst").alias("id"))
                 .dropDuplicates()
@@ -1387,15 +1268,37 @@ def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
                 break
             visited = visited.unionByName(nxt).localCheckpoint(eager=True)
             frontier = nxt
+        return (visited.groupBy("lm", "dist")
+                .agg(F.count(F.lit(1)).alias("n_vertices")))
     finally:
         edges.unpersist()
-    agg = (visited.groupBy("lm")
-           .agg(F.count(F.lit(1)).alias("n_reached"),
-                F.sum("dist").cast("long").alias("sum_dist")))
-    closeness = (F.expr("((n_reached - 1) * 2000000 + sum_dist) "
-                        "div (sum_dist * 2)").cast("double") / 1e6)
-    return agg.select("lm", F.col("n_reached").cast("long").alias("n_reached"),
-                      "sum_dist", closeness.alias("closeness"))
+
+
+def landmark_closeness(graph: GraphStore, landmarks: list[str], *,
+                       edge_type: str | None = None, max_depth: int = 6,
+                       undirected: bool = True) -> DataFrame:
+    """Closeness centrality of ``landmarks`` (Freeman 1979), depth-bounded:
+    closeness(l) = (reached - 1) / sum of BFS distances over the vertices
+    l reaches within ``max_depth`` hops. Exact closeness needs all-pairs
+    distances; production graphs estimate it from k sampled landmarks
+    (the Eppstein-Wang 2004 sampling shape) — here the landmarks ARE the
+    queried vertices, so the result is exact for them.
+
+    An aggregation over :func:`_landmark_levels`. The closeness ratio
+    uses the integer round-half-up recipe (engine-exact 6 decimals), NULL
+    for a landmark that reaches nothing. Returns (lm, n_reached,
+    sum_dist, closeness) where n_reached counts the landmark itself."""
+    levels = _landmark_levels(graph, landmarks, edge_type, max_depth,
+                              undirected)
+    agg = (levels.groupBy("lm")
+           .agg(F.sum("n_vertices").cast("long").alias("n_reached"),
+                F.sum(F.col("dist") * F.col("n_vertices")).cast("long")
+                .alias("sum_dist")))
+    closeness = (F.expr("CASE WHEN sum_dist > 0 THEN "
+                        "((n_reached - 1) * 2000000 + sum_dist) "
+                        "div (sum_dist * 2) END").cast("double") / 1e6)
+    return agg.select("lm", "n_reached", "sum_dist",
+                      closeness.alias("closeness"))
 
 
 def community_modularity(graph: GraphStore, *, edge_type: str | None = None,
@@ -1472,64 +1375,21 @@ def avg_neighbor_degree(graph: GraphStore, *, edge_type: str | None = None,
 
 def landmark_eccentricity(graph: GraphStore, landmarks: list[str], *,
                           edge_type: str | None = None, max_depth: int = 8,
-                          undirected: bool = True,
-                          local_guard: int = 2_000_000) -> DataFrame:
+                          undirected: bool = True) -> DataFrame:
     """Depth-bounded eccentricity of ``landmarks`` and the graph-diameter
     LOWER BOUND they witness: ecc(l) = max BFS distance from l within
     ``max_depth``; diameter >= max over any landmark set (the standard
     landmark/BoundingDiameters estimation shape — exact eccentricity
     needs all-pairs, production graphs bound it from sampled vertices).
 
-    Same frontier-BFS engine shape as landmark_closeness above: per round
-    one frontier-edge join + one anti-join against visited, k landmarks
-    widen the frontier, never the graph; rounds bounded by max_depth.
-    Returns (lm, n_reached, ecc, diameter_lb) — diameter_lb constant
-    across rows (a window max over the landmark-bounded result)."""
-    spark = graph.spark
-    edges = (_edge_pairs(graph, edge_type, undirected=undirected)
-             .select("src", "dst").dropDuplicates().persist())
-    n_e = edges.count()
-    # same local-finish guard as landmark_closeness (distinct undirected
-    # edges; the arc list doubles each edge when undirected)
-    if n_e <= (local_guard * 2 if undirected else local_guard):
-        try:
-            epdf = edges.toPandas()
-            levels = _local_landmark_levels(
-                epdf["src"].to_numpy(dtype=object),
-                epdf["dst"].to_numpy(dtype=object),
-                list(landmarks), max_depth)
-            acc: dict = {}
-            for lm, d, n in levels:
-                r, e = acc.get(lm, (0, 0))
-                acc[lm] = (r + n, max(e, d))
-            dlb = max((e for _, e in acc.values()), default=0)
-            rows = [(lm, r, e, dlb) for lm, (r, e) in acc.items()]
-            schema = ("lm string, n_reached long, ecc long, "
-                      "diameter_lb long")
-            return spark.createDataFrame(rows, schema)
-        finally:
-            edges.unpersist()
-    visited = (spark.createDataFrame([(l, l, 0) for l in landmarks],
-                                     "lm string, id string, dist int")
-               .localCheckpoint(eager=True))
-    frontier = visited
-    try:
-        for depth in range(1, max_depth + 1):
-            nxt, n_nxt = _ckpt_n(
-                frontier.join(edges, frontier["id"] == edges["src"])
-                .select("lm", F.col("dst").alias("id"))
-                .dropDuplicates()
-                .join(visited.select("lm", "id"), ["lm", "id"],
-                      "left_anti")
-                .withColumn("dist", F.lit(depth)))
-            if n_nxt == 0:
-                break
-            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        edges.unpersist()
-    agg = (visited.groupBy("lm")
-           .agg(F.count(F.lit(1)).cast("long").alias("n_reached"),
+    An aggregation over :func:`_landmark_levels`, the frontier BFS that
+    :func:`landmark_closeness` aggregates too. Returns (lm, n_reached,
+    ecc, diameter_lb) — diameter_lb constant across rows (a window max
+    over the landmark-bounded result)."""
+    levels = _landmark_levels(graph, landmarks, edge_type, max_depth,
+                              undirected)
+    agg = (levels.groupBy("lm")
+           .agg(F.sum("n_vertices").cast("long").alias("n_reached"),
                 F.max("dist").cast("long").alias("ecc")))
     w = Window.partitionBy(F.lit(1))  # landmark-domain-bounded (k rows)
     return agg.withColumn("diameter_lb", F.max("ecc").over(w))
@@ -1580,41 +1440,25 @@ def rich_club_coefficient(graph: GraphStore, thresholds: list[int],
 
 def _local_stress(srcs, dsts, landmarks, max_depth: int):
     """Driver-local exact two-pass landmark stress over a bounded edge
-    list (the ``local_guard`` seam in :func:`landmark_stress`). Per
+    list (the ``util.LOCAL_GUARD`` seam in :func:`landmark_stress`). Per
     landmark: forward BFS accumulating exact sigma path counts per
     level, backward rho fold from the deepest level — all BIGINT
     arithmetic via integer bincounts, identical to the distributed
     per-level joins. Returns aggregated (lm, dist, n_vertices,
     sum_sigma, sum_stress, max_stress) rows."""
     import numpy as np
-    import pandas as pd
 
-    m = len(srcs)
-    codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(srcs, dtype=object),
-                        np.asarray(dsts, dtype=object),
-                        np.asarray(landmarks, dtype=object)]))
-    u = codes[:m].astype(np.int64)
-    v = codes[m:2 * m].astype(np.int64)
-    lmc = codes[2 * m:]
-    nv = int(len(_vocab))
+    u, v, lmc, vocab = _factorize(srcs, dsts, landmarks)
+    nv = len(vocab)
     # CSR adjacency by source
     order = np.argsort(u, kind="stable")
+    gu = u[order]
     gv = v[order]
-    od = np.bincount(u, minlength=nv)
-    ends = np.cumsum(od)
-    starts = ends - od
+    gather = _csr_gather(gu, nv)
 
     def _neighbors(front):
-        cnts = od[front]
-        tot = int(cnts.sum())
-        if tot == 0:
-            return (np.zeros(0, np.int64), np.zeros(0, np.int64))
-        base = np.repeat(starts[front], cnts)
-        offs = (np.arange(tot)
-                - np.repeat(np.cumsum(cnts) - cnts, cnts))
-        nbr = gv[base + offs]
-        return (np.repeat(front, cnts), nbr)
+        idx = gather(front)
+        return gu[idx], gv[idx]
 
     out = []
     for li, lm in enumerate(landmarks):
@@ -1656,8 +1500,7 @@ def _local_stress(srcs, dsts, landmarks, max_depth: int):
 
 def landmark_stress(graph: GraphStore, landmarks: list[str], *,
                     edge_type: str | None = None, max_depth: int = 6,
-                    undirected: bool = True,
-                    local_guard: int = 2_000_000) -> DataFrame:
+                    undirected: bool = True) -> DataFrame:
     """Depth-bounded stress centrality from landmark sources (Shimbel
     1953; the integer-exact sibling of Brandes 2001 betweenness — path
     COUNTS through a vertex, not fractional dependencies, so every
@@ -1689,7 +1532,7 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
     n_e = edges.count()
     # the guard bounds DISTINCT UNDIRECTED edges (the SCC/k-truss memory
     # class); with undirected=True the arc list carries each edge twice
-    if n_e <= (local_guard * 2 if undirected else local_guard):
+    if n_e <= (util.LOCAL_GUARD * 2 if undirected else util.LOCAL_GUARD):
         try:
             epdf = edges.toPandas()
             rows = _local_stress(epdf["src"].to_numpy(dtype=object),
@@ -1713,7 +1556,7 @@ def landmark_stress(graph: GraphStore, landmarks: list[str], *,
     try:
         for depth in range(1, max_depth + 1):
             prev = levels[-1]
-            nxt, n_nxt = _ckpt_n(
+            nxt, n_nxt = checkpoint_counted(
                 prev.join(edges, prev["id"] == edges["src"])
                 .groupBy("lm", F.col("dst").alias("id"))
                 .agg(F.sum("sigma").alias("sigma"))
@@ -1827,7 +1670,7 @@ def _tarjan_components(adj: dict, nodes) -> tuple[list, dict]:
 def _local_scc_ids(edge_rows) -> dict:
     """Driver-local exact SCC labels: id -> min member id of its
     component. Input is a bounded list of (src, dst) pairs (the
-    ``local_guard`` seam below)."""
+    ``util.LOCAL_GUARD`` seam below)."""
     adj: dict = {}
     nodes: set = set()
     for src, dst in edge_rows:
@@ -1908,8 +1751,7 @@ def _reach_min(edges: DataFrame, nodes: DataFrame, *, max_iter: int = 50,
 
 def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                                   dst_col: str = "dst", max_rounds: int = 25,
-                                  max_iter: int = 50,
-                                  local_guard: int = 2_000_000) -> DataFrame:
+                                  max_iter: int = 50) -> DataFrame:
     """Exact strongly connected components of a directed edge DataFrame,
     by iterated forward/backward min-label peeling (the coloring variant
     of FW-BW — Fleischer, Hendrickson & Pinar IPDPS 2000; Orzan 2004;
@@ -1930,7 +1772,7 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
 
     100 TB shape: every step is an edge-grouped aggregate or a label
     join — the Pregel cost model, linear in |E| per propagation round,
-    no driver-side state above the guard. ``local_guard``: once the
+    no driver-side state above the guard. ``util.LOCAL_GUARD``: once the
     ACTIVE edge set fits under this bound, the remaining components are
     settled by one driver-local iterative Tarjan pass over the collected
     (bounded) edge list — the same bounded-local-finish discipline as
@@ -1945,14 +1787,14 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
     e0 = (edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
           .filter(F.col("src") != F.col("dst"))
           .dropDuplicates().persist())
-    nodes, n_nodes = _ckpt_rebased_n(
+    nodes, n_nodes = checkpoint_counted(
         e0.select(F.col("src").alias("id"))
         .unionByName(e0.select(F.col("dst").alias("id")))
-        .dropDuplicates())
+        .dropDuplicates(), rebase=True)
     rev = e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
     def _settle_locally(active_e, active_n, result):
-        # bounded by local_guard rows; exact Tarjan labels, then every
+        # bounded by util.LOCAL_GUARD rows; exact Tarjan labels, then every
         # active node absent from the (deduped, self-loop-free) active
         # edge list is its own singleton component
         labs = _local_scc_ids((r["src"], r["dst"])
@@ -1978,7 +1820,7 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                 return result
             if n_active_e is None:
                 n_active_e = active_e.count()   # persisted e0, one probe
-            if n_active_e <= local_guard:
+            if n_active_e <= util.LOCAL_GUARD:
                 return _settle_locally(active_e, active_n, result)
             f = _reach_min(active_e, active_n, max_iter=max_iter)
             b = (_reach_min(active_r, active_n, max_iter=max_iter)
@@ -1989,8 +1831,9 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
                        .transform(checkpoint_rebased))
             result = (result.unionByName(settled)
                       .transform(checkpoint_rebased))
-            active_n, n_active = _ckpt_rebased_n(
-                lab.filter(F.col("lab") != F.col("blab")).select("id"))
+            active_n, n_active = checkpoint_counted(
+                lab.filter(F.col("lab") != F.col("blab")).select("id"),
+                rebase=True)
             keep_src = active_n.withColumnRenamed("id", "src")
             keep_dst = active_n.withColumnRenamed("id", "dst")
             active_e, n_active_e = checkpoint_counted(
@@ -2007,8 +1850,7 @@ def strongly_connected_components(edges: DataFrame, *, src_col: str = "src",
 
 def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
                          src_col: str = "src", dst_col: str = "dst",
-                         max_iter: int = 50,
-                         local_guard: int = 2_000_000) -> DataFrame:
+                         max_iter: int = 50) -> DataFrame:
     """Broder bow-tie decomposition (Broder et al., "Graph structure in
     the web", WWW 2000) relative to the largest SCC: every node is CORE
     (in the largest SCC — ties broken by min scc_id), IN (reaches the
@@ -2048,7 +1890,7 @@ def bowtie_decomposition(edges: DataFrame, scc: DataFrame, *,
         .select(F.col("csrc").alias("src"), F.col("cdst").alias("dst"))
         .filter(F.col("src") != F.col("dst")).dropDuplicates(),
         rebase=True)
-    if n_ce <= local_guard:
+    if n_ce <= util.LOCAL_GUARD:
         # bounded-local finish (same guard discipline as SCC above): both
         # closures from ONE collected copy of the collapsed edge list;
         # lab == sentinel membership becomes two small broadcast frames
@@ -2210,7 +2052,7 @@ def dyad_census(edges: DataFrame, *, src_col: str = "src",
 
 def _local_temporal_ea(us, vs, ts, seed_list, max_hops, max_iter: int):
     """Driver-local exact earliest-arrival DP over a bounded temporal
-    edge list (the ``local_guard`` seam in
+    edge list (the ``util.LOCAL_GUARD`` seam in
     :func:`temporal_earliest_arrival`). Replays the distributed loop
     round for round: the frontier is exactly the improved set, a seed
     row's NULL arrival admits every outgoing edge (and is itself
@@ -2219,26 +2061,15 @@ def _local_temporal_ea(us, vs, ts, seed_list, max_hops, max_iter: int):
     raises the same RuntimeError. Returns ([(seed, node, arrival)],
     improving_flag)."""
     import numpy as np
-    import pandas as pd
 
-    m = len(us)
-    codes, _vocab = pd.factorize(
-        np.concatenate([np.asarray(us, dtype=object),
-                        np.asarray(vs, dtype=object),
-                        np.asarray(seed_list, dtype=object)]))
-    u = codes[:m].astype(np.int64)
-    v = codes[m:2 * m].astype(np.int64)
-    sc = codes[2 * m:]
+    u, v, sc, vocab = _factorize(us, vs, seed_list)
     t = np.asarray(ts, dtype=np.int64)
-    vocab = np.asarray(_vocab, dtype=object)
-    nv = int(len(vocab))
+    nv = len(vocab)
     order = np.lexsort((t, u))
     gu = u[order]
     gv = v[order]
     gt = t[order]
-    od = np.bincount(gu, minlength=nv)
-    ends = np.cumsum(od)
-    starts = ends - od
+    gather = _csr_gather(gu, nv)
     MAXL = np.iinfo(np.int64).max
     out = []
     improving_any = False
@@ -2250,15 +2081,7 @@ def _local_temporal_ea(us, vs, ts, seed_list, max_hops, max_iter: int):
         frontier = np.array([s], dtype=np.int64)
         improving = True
         for _ in range(max_hops if max_hops is not None else max_iter):
-            cnts = od[frontier]
-            tot = int(cnts.sum())
-            if tot == 0:
-                improving = False
-                break
-            base = np.repeat(starts[frontier], cnts)
-            offs = (np.arange(tot)
-                    - np.repeat(np.cumsum(cnts) - cnts, cnts))
-            idx = base + offs
+            idx = gather(frontier)
             src_g = gu[idx]
             dst_g = gv[idx]
             t_g = gt[idx]
@@ -2286,8 +2109,7 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
                               max_hops: int | None = 4,
                               max_iter: int = 50, src_col: str = "src",
                               dst_col: str = "dst",
-                              ts_col: str = "ts",
-                              local_guard: int = 2_000_000) -> DataFrame:
+                              ts_col: str = "ts") -> DataFrame:
     """Earliest-arrival time-respecting reachability over a temporal
     edge list (Wu et al., VLDB 2014 "Path problems in temporal
     graphs"): a path is time-respecting when edge timestamps are
@@ -2313,7 +2135,7 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
          .dropDuplicates().persist())
     n_e = e.count()
     seed_rows = None
-    if n_e <= local_guard:
+    if n_e <= util.LOCAL_GUARD:
         seed_rows = [r[0] for r in
                      seeds.select(seeds.columns[0]).collect()]
         # per-seed state is an O(|V|) array — keep the local path to a
@@ -2356,13 +2178,13 @@ def temporal_earliest_arrival(edges: DataFrame, seeds: DataFrame, *,
                 .agg(F.min("t").alias("arr2")))
             old = total.select("seed", F.col("node").alias("node2"),
                                F.col("arrival").alias("old_arr"))
-            imp, n_imp = _ckpt_rebased_n(
+            imp, n_imp = checkpoint_counted(
                 relaxed.join(old, ["seed", "node2"], "left")
                 .filter(F.col("old_arr").isNull()
                         & F.col("arr2").isNotNull()
                         | (F.col("arr2") < F.col("old_arr")))
                 .select("seed", F.col("node2").alias("node"),
-                        F.col("arr2").alias("arrival")))
+                        F.col("arr2").alias("arrival")), rebase=True)
             if n_imp == 0:
                 improving = False
                 break

@@ -40,7 +40,14 @@ def profile_table(df: DataFrame, columns: list[str] | None = None, *,
     ``_num``/``mean`` columns, string/date/timestamp extremes populate the
     ``_str`` columns (as their canonical cast-to-string form), the other
     family is NULL. Mean is rounded to 6 decimals via decimal
-    accumulation."""
+    accumulation.
+
+    With ``exact_distinct`` the source is scanned twice, so n_distinct
+    comes from a second snapshot of ``df``. When the input is not stable
+    across re-reads (samples, rand-derived columns, files changing
+    between jobs) it can disagree with n_rows/n_null (even exceed
+    n_rows); pass a checkpointed or cached ``df`` in that case, or use
+    ``exact_distinct=False`` (one scan, approximate n_distinct)."""
     fields = {f.name: f.dataType for f in df.schema.fields}
     cols = columns or list(fields)
     aggs, dist_aggs, structs = [], [], []

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.graph import GraphStore
 
 
@@ -108,7 +109,7 @@ def traverse(graph: GraphStore, roots, *, direction: str = "out",
     # streams edges with NO shuffle. Guarded by row count — a frontier that
     # outgrows the driver falls back to shuffle joins, which is the correct
     # trade at that size.
-    broadcast_max = 2_000_000
+    broadcast_max = util.BCAST_GUARD
 
     def ckpt_counted_typed(df):
         """Eager checkpoint; row count (and frontier type set, when arms

@@ -22,14 +22,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.graph import GraphStore
 from vivace_graph_v3_spark.operators.graph_algorithms import _edge_pairs
 from vivace_graph_v3_spark.pipeline.dedup import md5_hash64
 
+# negative_samples ranks a vocab of at most this many rows with one
+# single-task sort, a larger one with the range-partitioned rank
+RANK_GUARD = 4_000_000
+
 
 def random_walks(graph: GraphStore, *, edge_type: str | None = None,
-                 walk_length: int = 3, walks_per_node: int = 1,
-                 bcast_guard: int = 2_000_000) -> DataFrame:
+                 walk_length: int = 3, walks_per_node: int = 1) -> DataFrame:
     """Generate ``walks_per_node`` walks of up to ``walk_length`` steps
     from every vertex. Returns (walk_id, step, node); a walk that reaches
     a vertex with no outgoing edges terminates early (no further rows).
@@ -46,7 +50,7 @@ def random_walks(graph: GraphStore, *, edge_type: str | None = None,
         edges.groupBy("src")
         .agg(F.sort_array(F.collect_list("dst")).alias("__nbrs"),
              F.count(F.lit(1)).alias("deg")))
-    # bounded neighbor table (the pagerank bcast_guard discipline): ship
+    # bounded neighbor table (the pagerank broadcast guard): ship
     # it broadcast into every step's join and leave the step chain LAZY —
     # the whole walk corpus is then ONE map-only job (each union arm
     # replays its prefix of broadcast joins over the small cursor frame;
@@ -55,7 +59,7 @@ def random_walks(graph: GraphStore, *, edge_type: str | None = None,
     # guard the per-step checkpointed equi-join below is the shape that
     # holds at 100 TB (the neighbor table is O(|V|) and never fits a
     # broadcast there).
-    bcast = n_nbr <= bcast_guard
+    bcast = n_nbr <= util.BCAST_GUARD
 
     starts = (graph.scan_vertices(columns=["id"]).select("id")
               .dropDuplicates()
@@ -113,8 +117,7 @@ def skipgram_pairs(walks: DataFrame, *, window: int = 2,
 
 
 def negative_samples(pairs: DataFrame, vertices: DataFrame, *,
-                     k: int = 3, id_col: str = "id",
-                     rank_guard: int = 4_000_000) -> DataFrame:
+                     k: int = 3, id_col: str = "id") -> DataFrame:
     """Attach ``k`` deterministic negative samples to every skip-gram
     pair — the final ingredient of word2vec-style embedding training
     (Mikolov et al. 2013 negative sampling). Negative j for a pair is
@@ -135,7 +138,7 @@ def negative_samples(pairs: DataFrame, vertices: DataFrame, *,
     base = (vertices.select(F.col(id_col).alias("negative"))
             .dropDuplicates().localCheckpoint(eager=True))
     n = base.count()
-    if n <= rank_guard:
+    if n <= RANK_GUARD:
         # bounded vocab: one single-task sort is cheaper than the
         # distributed rank's extra shuffle + offset pass
         ranked = base.withColumn(

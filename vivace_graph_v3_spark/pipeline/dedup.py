@@ -29,6 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, Window, functions as F
 
+from vivace_graph_v3_spark import util
 from vivace_graph_v3_spark.pipeline.text import tokens
 from vivace_graph_v3_spark.util import checkpoint_counted, ensure_parallelism
 
@@ -772,7 +773,7 @@ _ = Window  # (window paging used by callers)
 
 def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
                    id_b: str = "id_b", max_iter: int = 15,
-                   driver_pairs_guard: int = 2_000_000) -> DataFrame:
+                   driver_pairs_guard: int | None = None) -> DataFrame:
     """Collapse near-dup PAIRS into duplicate clusters: connected components
     over the pair graph. Returns (id, cluster) for every id that appears in
     a pair; cluster = min id of the component — the canonical
@@ -781,9 +782,10 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     Two regimes, like pagerank's broadcast guard: the pair graph is the
     OUTPUT of dedup (bounded by the duplicate count, not the corpus), so
     even at 100 TB it is usually orders of magnitude smaller than the
-    input. Below ``driver_pairs_guard`` pairs (~tens of MB) the component
-    labels come from a single-pass union-find on the driver — one job,
-    no iteration. Past the guard, distributed min-label propagation with
+    input. Below ``driver_pairs_guard`` pairs (default
+    ``util.LOCAL_GUARD``, ~tens of MB) the component labels come from a
+    single-pass union-find over one bounded collect on the driver — no
+    iteration. Past the guard, distributed min-label propagation with
     pointer jumping (shallow dup clusters converge in a few rounds)."""
     spark = pairs.sparkSession
     # the symmetric closure reads `pairs` twice (forward + reversed branch
@@ -793,6 +795,8 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
     # whole upstream dedup pipeline executes twice before iteration starts
     pairs, n_pairs = checkpoint_counted(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")))
+    if driver_pairs_guard is None:
+        driver_pairs_guard = util.LOCAL_GUARD
     if n_pairs <= driver_pairs_guard:
         parent: dict = {}
 
@@ -804,7 +808,7 @@ def dedup_clusters(pairs: DataFrame, *, id_a: str = "id_a",
                 parent[x], x = root, parent[x]
             return root
 
-        for row in pairs.toLocalIterator():
+        for row in pairs.collect():
             a, b = row["a"], row["b"]
             parent.setdefault(a, a)
             parent.setdefault(b, b)

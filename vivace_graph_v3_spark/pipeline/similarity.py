@@ -83,11 +83,12 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
     (queries x ~k)-row rank.
 
     ``label_col``/``q_label_col`` (both or neither): additionally
-    exclude candidates whose label EQUALS the query row's — the
+    keep only candidates whose label DIFFERS from the query row's — the
     hard-negative-mining constraint (rank among different-label vectors
-    only). The mask composes with the self-id mask before the kth-raw
-    pre-selection, so excluded candidates can never displace a kept
-    one."""
+    only). Like the SQL predicate ``la != lb``, a NULL label on either
+    side excludes the pair. The mask composes with the self-id mask
+    before the kth-raw pre-selection, so excluded candidates can never
+    displace a kept one."""
     import numpy as np
     import pandas as pd
 
@@ -143,8 +144,10 @@ def _cosine_topk_seed_scan(corpus: DataFrame, queries: DataFrame, k: int, *,
             self_mask = qids[:, None] == cids[None, :]
             if clabels is not None:
                 qlabels = pdf["qlabel"].to_numpy()
-                self_mask = self_mask | (qlabels[:, None]
-                                         == clabels[None, :])
+                self_mask = (self_mask
+                             | (qlabels[:, None] == clabels[None, :])
+                             | pd.isnull(qlabels)[:, None]
+                             | pd.isnull(clabels)[None, :])
             Sm = np.where(self_mask, -np.inf, S)
             # kth-largest raw per query (NaN sorts as largest in numpy,
             # matching Spark/DuckDB NaN-greatest ordering)

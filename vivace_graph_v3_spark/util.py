@@ -4,6 +4,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# The guard policy of every bounded-regime operator, in rows. Below
+# LOCAL_GUARD an operator may collect its (edge or pair) input and finish
+# on the driver; below BCAST_GUARD it may ship its iteration state as a
+# broadcast. Past either, it runs the distributed formulation that holds
+# at any scale. Operators read these at call time (``util.LOCAL_GUARD``),
+# so patching the module attribute switches every operator's regime; size
+# them to driver memory (~100 bytes per collected row).
+LOCAL_GUARD = 2_000_000
+BCAST_GUARD = 2_000_000
+
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Spread a narrow input across the cluster before CPU-heavy per-row
