@@ -139,3 +139,45 @@ def test_storm_log_replays_to_live_state(vg, spark, tmp_path):
     live = {(r["id"], r["value"]) for r in vg.read("acct").collect()}
     replayed = {(r["id"], r["value"]) for r in vg2.read("acct").collect()}
     assert live == replayed
+
+
+def test_commit_storm_epochs_dense_across_compaction(vg, spark):
+    """4 threads x 2 commits with a compaction racing them: compaction
+    takes the commit lock and keeps the high-water epoch, so the epochs
+    stay unique and dense and no row is lost."""
+    n_threads, n_commits = 4, 2
+    epochs, errors = [], []
+    lock = threading.Lock()
+    first = threading.Event()
+
+    def worker(t):
+        try:
+            for c in range(n_commits):
+                rows = spark.createDataFrame(
+                    [(f"t{t}c{c}", t * 100 + c)], "id string, value long")
+                e = vg.commit(vg.begin().create("acct", rows))
+                first.set()
+                with lock:
+                    epochs.append(e)
+        except Exception as ex:  # pragma: no cover - surfaced below
+            errors.append(ex)
+
+    def compactor():
+        try:
+            first.wait(60)
+            vg.compact()
+        except Exception as ex:  # pragma: no cover
+            errors.append(ex)
+
+    threads = [threading.Thread(target=worker, args=(t,))
+               for t in range(n_threads)] + [threading.Thread(target=compactor)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(300)
+        assert not th.is_alive()
+    assert not errors
+    total = n_threads * n_commits
+    assert sorted(epochs) == list(range(1, total + 1))
+    assert vg.current_epoch() == total
+    assert vg.read("acct").count() == total

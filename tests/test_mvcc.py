@@ -123,7 +123,9 @@ def test_compact_preserves_state_and_retention(vg, spark):
     vg.compact()
     cur = vg.read("person").first()
     assert cur["age"] == 33 and cur["revision"] == 3
-    assert vg.current_epoch() == 0  # log truncated
+    import os
+    assert not os.listdir(vg.log_path)  # log truncated
+    assert vg.current_epoch() == 4      # the high-water epoch survives
     # keep_revisions=1 -> exactly one superseded version retained
     hist = spark.read.parquet(str(vg.path) + "/history/vertex_person")
     assert hist.count() == 1 and hist.first()["age"] == 32
@@ -155,3 +157,97 @@ def test_multi_type_atomic_commit(vg, spark):
     # snapshot BEFORE the epoch sees neither
     assert vg.read("person", as_of=epoch - 1).count() == 0
     assert vg.read("knows", as_of=epoch - 1).count() == 0
+
+
+def _spark_jobs(spark) -> int:
+    """The id the scheduler gives its next job (monotonic, and advanced
+    synchronously at submit, unlike the asynchronous status store)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _read_rows(vg, type_name):
+    return {r["id"]: r.asDict()
+            for r in vg.read(type_name, include_deleted=True).collect()}
+
+
+def _lookup_dict(vg, type_name, node_id):
+    row = vg.lookup(type_name, node_id)
+    return row.asDict() if row is not None else None
+
+
+def test_lookup_matches_merge_on_read(vg, spark):
+    """lookup() returns exactly the row of the merge-on-read plan: base
+    only, log only, log over base, deleted, missing, edge, and again
+    after the log is folded into the base."""
+    vg.commit(vg.begin().create("person", _people(spark, [
+        ("p1", "ann", 30), ("p2", "bob", 40), ("p3", "cyd", 50)])))
+    vg.commit(vg.begin().create("knows", spark.createDataFrame(
+        [("e1", "p1", "p2", 2.0)],
+        "id string, src string, dst string, weight double")))
+    vg.compact()                                   # p1..p3, e1: base only
+    upd = spark.createDataFrame([("p1", "ann", 31, 0)],
+                                "id string, name string, age int, revision long")
+    vg.commit(vg.begin().save("person", upd))      # p1: log over base
+    vg.commit(vg.begin().create("person", _people(spark, [("p4", "dee", 9)])))
+    vg.commit(vg.begin().mark_deleted("person", ["p2"]))
+    cases = {"person": ("p1", "p2", "p3", "p4", "nobody"), "knows": ("e1",)}
+    for _ in range(2):                             # before and after compact
+        for t, ids in cases.items():
+            want = _read_rows(vg, t)
+            for i in ids:
+                assert _lookup_dict(vg, t, i) == want.get(i), (t, i)
+        vg.compact()
+    assert _lookup_dict(vg, "person", "p1")["age"] == 31
+    # a tombstone keeps the slots it deleted
+    p2 = _lookup_dict(vg, "person", "p2")
+    assert (p2["deleted"], p2["name"], p2["age"]) == (True, "bob", 40)
+    assert vg.lookup("person", "nobody") is None
+
+
+def test_lookup_runs_one_spark_job(vg, spark):
+    vg.commit(vg.begin().create("person", _people(spark, [("p1", "ann", 30)])))
+    vg.compact()
+    upd = spark.createDataFrame([("p1", "ann", 31, 0)],
+                                "id string, name string, age int, revision long")
+    vg.commit(vg.begin().save("person", upd))
+    vg.lookup("person", "p1")       # first call infers the base schema
+    j0 = _spark_jobs(spark)
+    assert vg.lookup("person", "p1")["age"] == 31
+    assert _spark_jobs(spark) - j0 == 1
+    j0 = _spark_jobs(spark)
+    assert vg.current_epoch() == 2  # recorded by the commit: no job
+    assert _spark_jobs(spark) == j0
+
+
+def test_second_writer_commit_and_compact_are_seen(vg, spark):
+    """A second VersionedGraph on the same path commits, then compacts:
+    the first instance's lookup, read and current_epoch see both."""
+    vg.commit(vg.begin().create("person", _people(spark, [("p1", "ann", 30)])))
+    assert vg.lookup("person", "p1")["age"] == 30 and vg.current_epoch() == 1
+    other = VersionedGraph(spark, vg.registry, vg.path)
+    upd = spark.createDataFrame([("p1", "ann", 31, 0)],
+                                "id string, name string, age int, revision long")
+    other.commit(other.begin().save("person", upd))
+    assert vg.lookup("person", "p1")["age"] == 31
+    assert vg.read("person").first()["age"] == 31
+    assert vg.current_epoch() == 2
+    other.compact()
+    assert vg.lookup("person", "p1")["revision"] == 1
+    assert vg.read("person").first()["age"] == 31
+    assert vg.current_epoch() == 2
+    other.commit(other.begin().create("person", _people(spark, [("p2", "b", 1)])))
+    assert vg.current_epoch() == 3
+    assert vg.lookup("person", "p2")["commit_epoch"] == 3
+
+
+def test_epochs_continue_after_compact(vg, spark):
+    """Compaction keeps the high-water epoch: a commit after it gets a new
+    epoch, so an as_of read of an older epoch does not see it."""
+    vg.commit(vg.begin().create("person", _people(spark, [("p1", "ann", 30)])))
+    vg.compact()
+    assert vg.current_epoch() == 1
+    e = vg.commit(vg.begin().create("person", _people(spark, [("p3", "cy", 5)])))
+    assert e == 2
+    assert {r["id"] for r in vg.read("person", as_of=1).collect()} == {"p1"}
+    assert {r["id"] for r in vg.read("person").collect()} == {"p1", "p3"}
+

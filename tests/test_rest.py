@@ -260,3 +260,18 @@ def test_ndjson_format(server):
         assert resp.headers["Content-Type"] == "application/x-ndjson"
         lines = resp.read().decode().splitlines()
     assert [json.loads(ln) for ln in lines] == [{"n": "ann"}, {"n": "bob"}]
+
+
+def test_get_after_delete_keeps_slots(server):
+    """A tombstone carries the slots the vertex had when it was deleted."""
+    srv, vg = server
+    base = f"{srv.address}/graph/main"
+    _req("POST", f"{base}/vertex/person", {"id": "p1", "name": "ann", "age": 30})
+    _req("DELETE", f"{base}/vertex/p1")
+    st, got = _req("GET", f"{base}/vertex/p1")
+    assert (got["deleted"], got["name"], got["age"]) == (True, "ann", 30)
+    assert got["revision"] == 1
+    # a deleted vertex cannot be updated, and its id cannot be reused
+    _req("PUT", f"{base}/vertex/p1", {"age": 31}, expect_error=404)
+    _req("POST", f"{base}/vertex/person", {"id": "p1", "name": "x"},
+         expect_error=409)

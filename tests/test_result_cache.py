@@ -91,3 +91,26 @@ def test_literal_collision_serves_fresh_result(vg, tmp_path):
                 .filter(F.col("name") == "ann").select("id"))
     assert q1.count() == 0 and q2.count() == 1
     assert rc.stats == {"hits": 0, "misses": 2}
+
+
+def test_compaction_does_not_reuse_epoch_keys(vg, spark, tmp_path):
+    """A commit after compact() must not land on an epoch a cached result
+    is already keyed by: the same plan (base + log) asked again after a
+    compaction and a commit must miss."""
+    rc = ResultCache(vg, str(tmp_path / "rc"))
+
+    def total():
+        return vg.read("person").agg(F.sum("age").alias("s"))
+
+    def add(pid, age):
+        rows = spark.createDataFrame([(pid, "x", age)],
+                                     "id string, name string, age int")
+        vg.commit(vg.begin().create("person", rows))
+
+    vg.compact()
+    add("p4", 20)
+    assert rc.run(total).first()["s"] == 120
+    vg.compact()
+    add("p5", 50)
+    assert rc.run(total).first()["s"] == 170
+    assert rc.stats == {"hits": 0, "misses": 2}

@@ -11819,7 +11819,9 @@ def _session_wal_graph(spark, sf_dir: str) -> str:
     from vivace_graph_v3_spark.schema import SchemaRegistry
 
     mt = os.path.getmtime(f"{sf_dir}/customer.parquet")
-    tag = hashlib.sha256(f"wal:{sf_dir}:{int(mt)}".encode()).hexdigest()[:12]
+    # the tag's version bumps when the log rows a commit writes change
+    # (v2: a tombstone carries the slots it deleted)
+    tag = hashlib.sha256(f"wal2:{sf_dir}:{int(mt)}".encode()).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"vgv3_wal_{tag}")
     if os.path.isdir(path):
         return path
@@ -11860,8 +11862,9 @@ def q_wal_txn_log_roundtrip(spark, sf_dir):
     commits through ``Transaction`` (insert / OCC save / tombstone),
     then the raw append-only log read back and projected to its
     relational image — commit epoch, op, id, revision bookkeeping,
-    tombstone flag, and the JSON payload's typed slots. committed_at is
-    the only column excluded (wall-clock)."""
+    tombstone flag, and the JSON payload's typed slots (a tombstone
+    carries the slots it deleted). committed_at is the only column
+    excluded (wall-clock)."""
     import os
 
     from vivace_graph_v3_spark.mvcc import LOG_SCHEMA
@@ -11890,7 +11893,7 @@ SELECT 2, 'update', id, 1, FALSE, cents + 100, segment
 FROM c WHERE k % 7 = 0
 UNION ALL
 SELECT 3, 'delete', id, CASE WHEN k % 7 = 0 THEN 2 ELSE 1 END, TRUE,
-       CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR)
+       cents + CASE WHEN k % 7 = 0 THEN 100 ELSE 0 END, segment
 FROM c WHERE k % 11 = 3
 """
 

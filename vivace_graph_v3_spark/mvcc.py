@@ -26,7 +26,12 @@ base snapshot plus the (small) delta log, resolved with
 latest-(epoch, revision)-per-id-wins. The window function runs only over log
 rows touching changed ids — never over the 100 TB base, which contributes via
 a broadcast-able anti-join of changed ids. ``compact()`` folds deltas into the
-base copy-on-write so the delta window stays bounded.
+base copy-on-write so the delta window stays bounded. A point read by id
+(:meth:`VersionedGraph.lookup`) skips the window: it filters both scans on
+the id and keeps the newest row in one job.
+
+Commit epochs are monotonic for the life of the directory: ``compact()``
+persists the high-water epoch in ``path/EPOCH`` before it drops the log.
 
 The log row schema is fixed across node types: declared slots are carried as a
 JSON payload (the columnar analog of the reference serializing the slot plist
@@ -36,6 +41,7 @@ the schema registry at read time. Base tables stay fully typed parquet.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import time
@@ -68,6 +74,17 @@ class ConflictError(Exception):
 
 def _slot_struct(nt) -> T.StructType:
     return T.StructType([T.StructField(n, t, True) for n, t in nt.slots.items()])
+
+
+def _listing(path: str) -> tuple[str, ...] | None:
+    """The data files of a parquet directory (None if it does not exist).
+    Part files are immutable and uniquely named, so an unchanged listing
+    means unchanged contents: it stamps what the read path reuses."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return None
+    return tuple(sorted(n for n in names if not n.startswith(("_", "."))))
 
 
 class Transaction:
@@ -111,6 +128,14 @@ class VersionedGraph:
         self.registry = registry
         self.path = path
         self.name = name
+        # work reused while a directory's listing is unchanged:
+        # (log listing, max commit_epoch of the log) and, per type,
+        # (base listing, base schema). Threads may race to refresh them;
+        # the loser's value is for a listing that never recurs (part
+        # names are unique), so a race costs one recompute, never a
+        # stale answer
+        self._log_epoch: tuple[tuple, int] | None = None
+        self._base_schema: dict[str, tuple[tuple, T.StructType]] = {}
         os.makedirs(self.log_path, exist_ok=True)
 
     # -- paths ---------------------------------------------------------------
@@ -124,12 +149,62 @@ class VersionedGraph:
 
     # -- epoch bookkeeping ---------------------------------------------------
 
+    @property
+    def _epoch_marker_path(self) -> str:
+        return os.path.join(self.path, "EPOCH")
+
     def _log(self) -> DataFrame:
         return self.spark.read.schema(LOG_SCHEMA).parquet(self.log_path)
 
+    def _log_rows(self, nt) -> DataFrame:
+        return self._log().filter((F.col("kind") == nt.kind) &
+                                  (F.col("type") == nt.name))
+
     def current_epoch(self) -> int:
-        row = self._log().agg(F.max("commit_epoch")).first()
-        return int(row[0]) if row and row[0] is not None else 0
+        """The newest committed epoch: max of the log and of the high-water
+        mark the last compaction persisted. The log's max is recomputed
+        only when its listing changed (a commit or compaction by any
+        writer); the log is listed before the marker is read, so a
+        compaction racing this call is seen through one or the other."""
+        stamp = _listing(self.log_path)
+        memo = self._log_epoch
+        if memo is None or memo[0] != stamp:
+            top = (self._log().agg(F.max("commit_epoch")).first()[0]
+                   if stamp else None)
+            memo = (stamp, int(top) if top is not None else 0)
+            self._log_epoch = memo
+        return max(memo[1], self._epoch_marker())
+
+    def _epoch_marker(self) -> int:
+        try:
+            with open(self._epoch_marker_path) as f:
+                return int(f.read())
+        except FileNotFoundError:
+            return 0
+
+    def _write_epoch_marker(self, epoch: int) -> None:
+        """Atomic replace (tmp + rename): a reader sees the old or the new
+        high-water mark, never a torn one."""
+        tmp = f"{self._epoch_marker_path}.tmp-{os.getpid()}"
+        with open(tmp, "w") as f:
+            f.write(str(epoch))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._epoch_marker_path)
+
+    @contextlib.contextmanager
+    def _commit_lock(self):
+        """The single-writer lock (the reference's transaction-manager
+        lock, transactions.lisp:1803-1810): a file lock, so it holds
+        across threads and processes; readers never take it."""
+        import fcntl
+
+        with open(os.path.join(self.path, ".commit.lock"), "w") as lk:
+            fcntl.flock(lk, fcntl.LOCK_EX)
+            try:
+                yield
+            finally:
+                fcntl.flock(lk, fcntl.LOCK_UN)
 
     # -- write path ----------------------------------------------------------
 
@@ -141,10 +216,10 @@ class VersionedGraph:
         revisions (OCC), serialize to log rows, append to the WAL
         (transactions.lisp:1906-1952 -> 1382-1424).
 
-        Commit-time mutual exclusion (the reference's transaction-manager
-        lock, transactions.lisp:1803-1810) is a file lock on the log
-        directory — one writer per graph across processes; readers never
-        take it.
+        Commit-time mutual exclusion is :meth:`_commit_lock` — one writer
+        per graph across processes. The epoch just written is recorded
+        under the new log listing, so the next ``current_epoch()`` runs
+        no job.
 
         OCC validation is FUSED into the serialization job: each
         update/delete op carries an Observation whose aggregates are
@@ -155,58 +230,56 @@ class VersionedGraph:
         commit still leaves the log untouched — atomicity is the
         promote-after-validate rename, the same protocol a distributed
         committer uses."""
-        import fcntl
-
-        lock_file = os.path.join(self.path, ".commit.lock")
-        with open(lock_file, "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                epoch = self.current_epoch() + 1
-                frames = []
-                checks = []
-                for op, type_name, df in tx.ops:
-                    nt = self.registry.get(type_name)
-                    fdf, check = self._to_log_rows(op, nt, df, epoch)
-                    frames.append(fdf)
-                    if check is not None:
-                        checks.append(check)
-                if not frames:
-                    return epoch
-                out = frames[0]
-                for fdf in frames[1:]:
-                    out = out.unionByName(fdf)
-                if not checks:
-                    # insert-only commit: no validation needed, append
-                    # directly (coalesce keeps the historical one-file-
-                    # per-commit log layout for map-only insert batches)
-                    out.coalesce(1).write.mode("append").parquet(self.log_path)
-                    return epoch
-                staging = os.path.join(
-                    self.path, f".staging-{epoch}-{os.getpid()}-{time.time_ns()}")
-                try:
-                    # no coalesce here: the validation join / merge-on-read
-                    # window keep their parallelism inside this one job and
-                    # AQE's partition coalescing sizes the output files
-                    out.write.mode("overwrite").parquet(staging)
-                    for obs, op, name, check_stale in checks:
-                        row = obs.get
-                        if row["missing"]:
-                            raise ConflictError(
-                                f"{op} on unknown {name} id "
-                                f"{row['missing_id']!r}")
-                        if check_stale and row["stale"]:
-                            raise ConflictError(
-                                f"stale save of {name} id {row['stale_id']!r}: "
-                                f"carried revision is no longer current")
-                    for fname in os.listdir(staging):
-                        if fname.startswith("part-"):
-                            os.rename(os.path.join(staging, fname),
-                                      os.path.join(self.log_path, fname))
-                finally:
-                    shutil.rmtree(staging, ignore_errors=True)
+        with self._commit_lock():
+            epoch = self.current_epoch() + 1
+            frames = []
+            checks = []
+            for op, type_name, df in tx.ops:
+                nt = self.registry.get(type_name)
+                fdf, check = self._to_log_rows(op, nt, df, epoch)
+                frames.append(fdf)
+                if check is not None:
+                    checks.append(check)
+            if not frames:
                 return epoch
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
+            out = frames[0]
+            for fdf in frames[1:]:
+                out = out.unionByName(fdf)
+            if not checks:
+                # insert-only commit: no validation needed, append
+                # directly (coalesce keeps the historical one-file-
+                # per-commit log layout for map-only insert batches)
+                out.coalesce(1).write.mode("append").parquet(self.log_path)
+            else:
+                self._validate_and_promote(out, checks, epoch)
+            self._log_epoch = (_listing(self.log_path), epoch)
+            return epoch
+
+    def _validate_and_promote(self, out: DataFrame, checks: list,
+                              epoch: int) -> None:
+        staging = os.path.join(
+            self.path, f".staging-{epoch}-{os.getpid()}-{time.time_ns()}")
+        try:
+            # no coalesce here: the validation join / merge-on-read
+            # window keep their parallelism inside this one job and
+            # AQE's partition coalescing sizes the output files
+            out.write.mode("overwrite").parquet(staging)
+            for obs, op, name, check_stale in checks:
+                row = obs.get
+                if row["missing"]:
+                    raise ConflictError(
+                        f"{op} on unknown {name} id "
+                        f"{row['missing_id']!r}")
+                if check_stale and row["stale"]:
+                    raise ConflictError(
+                        f"stale save of {name} id {row['stale_id']!r}: "
+                        f"carried revision is no longer current")
+            for fname in os.listdir(staging):
+                if fname.startswith("part-"):
+                    os.rename(os.path.join(staging, fname),
+                              os.path.join(self.log_path, fname))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def _to_log_rows(self, op: str, nt, df: DataFrame, epoch: int):
         """Serialize one op's rows to log-row shape. Returns
@@ -230,12 +303,18 @@ class VersionedGraph:
             revision = F.lit(0).cast("long")
             deleted = F.lit(False)
         else:
-            # join current state for revision validation / bump
+            # join current state for revision validation / bump; a delete
+            # also carries the current slots, so its tombstone keeps them
+            carried = slots if op == "delete" else []
             cur = self.read(nt.name, include_deleted=True).select(
                 F.col("id"), F.col("revision").alias("__cur_rev"),
                 *( [F.col("src").alias("__cur_src"), F.col("dst").alias("__cur_dst"),
-                    F.col("weight").alias("__cur_w")] if nt.kind == "edge" else [] ))
+                    F.col("weight").alias("__cur_w")] if nt.kind == "edge" else [] ),
+                *[F.col(c).alias(f"__cur_{c}") for c in carried])
             df = df.join(cur, "id", "left")
+            if carried:
+                payload = F.to_json(F.struct(
+                    *[F.col(f"__cur_{c}").alias(c) for c in carried]))
             # OCC probe aggregates observed on the rows streaming into the
             # commit write — count unknown ids and stale saves; commit()
             # raises BEFORE promoting the staged files, so a conflict
@@ -290,15 +369,28 @@ class VersionedGraph:
                               *[F.col(f"__p.{c}").alias(c) for c in nt.slots])
 
     def _base(self, nt) -> DataFrame:
+        """The typed base of one type. Its schema is inferred (one Spark
+        job) only when the base's listing changed; every call still gets
+        a fresh relation, so two reads of a type never share attribute
+        ids."""
         p = self._base_path(nt)
         # crash recovery: a compact() interrupted between its two swap
         # renames leaves the base only at the .old aside — restore it
         # (same self-healing rule as the streaming stores, ADVICE r6)
         if not os.path.exists(p) and os.path.isdir(p + ".old"):
             os.rename(p + ".old", p)
-        if os.path.exists(p):
-            return self.spark.read.parquet(p)
-        return self.spark.createDataFrame([], nt.struct_type())
+        stamp = _listing(p)
+        if stamp is None:
+            # an empty local relation (a false filter the optimizer folds
+            # away), not an empty RDD: a union with it schedules no tasks
+            return self.spark.range(1).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name)
+                  for f in nt.struct_type().fields]).where(F.lit(False))
+        memo = self._base_schema.get(nt.name)
+        if memo is None or memo[0] != stamp:
+            memo = (stamp, self.spark.read.parquet(p).schema)
+            self._base_schema[nt.name] = memo
+        return self.spark.read.schema(memo[1]).parquet(p)
 
     def read(self, type_name: str, *, as_of: int | None = None,
              include_deleted: bool = False) -> DataFrame:
@@ -311,8 +403,7 @@ class VersionedGraph:
         """
         nt = self.registry.get(type_name)
         base = self._base(nt)
-        log = self._log().filter((F.col("kind") == nt.kind) &
-                                 (F.col("type") == nt.name))
+        log = self._log_rows(nt)
         if as_of is not None:
             log = log.filter(F.col("commit_epoch") <= as_of)
             base = base.filter(F.col("commit_epoch") <= as_of)
@@ -327,12 +418,28 @@ class VersionedGraph:
             cur = cur.filter(~F.col("deleted"))
         return cur
 
+    def lookup(self, type_name: str, node_id: str):
+        """The newest version of one id, deleted or not, as a Row (None if
+        the id was never written): ``lookup-vertex`` (vertex.lisp:84-91)
+        under the current snapshot. Equal to
+        ``read(type_name, include_deleted=True).filter(id == node_id)``
+        but one Spark job: both scans are filtered on the id, and a log
+        row beats the base row, then the newest (epoch, revision) wins —
+        no per-id window, no changed-id anti-join."""
+        nt = self.registry.get(type_name)
+        base = self._base(nt).filter(F.col("id") == node_id)
+        log = self._decode(nt, self._log_rows(nt).filter(F.col("id") == node_id))
+        rows = (base.withColumn("__from_log", F.lit(False))
+                .unionByName(log.withColumn("__from_log", F.lit(True)))
+                .orderBy(F.desc("__from_log"), F.desc("commit_epoch"),
+                         F.desc("revision"))
+                .limit(1).drop("__from_log").collect())
+        return rows[0] if rows else None
+
     def history(self, type_name: str) -> DataFrame:
         """Every retained version of every node (MVCC chain walk analog)."""
         nt = self.registry.get(type_name)
-        log = self._log().filter((F.col("kind") == nt.kind) &
-                                 (F.col("type") == nt.name))
-        return self._base(nt).unionByName(self._decode(nt, log))
+        return self._base(nt).unionByName(self._decode(nt, self._log_rows(nt)))
 
     def store(self, *, as_of: int | None = None) -> GraphStore:
         """Materialize a :class:`GraphStore` view (optionally a snapshot read,
@@ -398,42 +505,51 @@ class VersionedGraph:
     def compact(self) -> None:
         """Fold the delta log into the base (copy-on-write), retaining at most
         ``keep_revisions`` superseded versions per id in ``path/history``
-        (the epoch-gated reaper analog, transactions.lisp:470-599)."""
+        (the epoch-gated reaper analog, transactions.lisp:470-599).
+
+        Runs under the commit lock. The high-water epoch is persisted
+        before the log is dropped, so epochs keep counting up afterwards:
+        an ``as_of`` read or an epoch-keyed cache entry never meets a
+        reused epoch."""
+        with self._commit_lock():
+            high = self.current_epoch()
+            for nt in self.registry.types():
+                self._compact_type(nt)
+            self._write_epoch_marker(high)
+            shutil.rmtree(self.log_path)
+            os.makedirs(self.log_path, exist_ok=True)
+
+    def _compact_type(self, nt) -> None:
         hist_path = os.path.join(self.path, "history")
-        for nt in self.registry.types():
-            log = self._log().filter((F.col("kind") == nt.kind) &
-                                     (F.col("type") == nt.name))
-            if log.isEmpty():
-                continue
-            cur = self.read(nt.name, include_deleted=True)
-            keep = nt.keep_revisions
-            if keep is None or keep > 0:
-                w = Window.partitionBy("id").orderBy(F.desc("commit_epoch"),
-                                                    F.desc("revision"))
-                old = (self.history(nt.name)
-                       .withColumn("__rn", F.row_number().over(w))
-                       .filter(F.col("__rn") > 1))
-                if keep is not None:
-                    old = old.filter(F.col("__rn") <= keep + 1)
-                (old.drop("__rn").write.mode("append")
-                 .parquet(os.path.join(hist_path, f"{nt.kind}_{nt.name}")))
-            tmp = self._base_path(nt) + ".compacting"
-            cur.write.mode("overwrite").parquet(tmp)
-            final = self._base_path(nt)
-            # rename-aside swap (never rmtree-then-rename a live store —
-            # the ADVICE r6 rule): a crash between any two steps leaves
-            # old or new base intact; and with the log still present,
-            # merge-on-read over either base is identical (the per-id
-            # window re-derives the same latest rows), so the swap is
-            # crash-idempotent end to end
-            old = final + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.exists(final):
-                os.rename(final, old)
-            os.rename(tmp, final)
-            shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(self.log_path)
-        os.makedirs(self.log_path, exist_ok=True)
+        if self._log_rows(nt).isEmpty():
+            return
+        cur = self.read(nt.name, include_deleted=True)
+        keep = nt.keep_revisions
+        if keep is None or keep > 0:
+            w = Window.partitionBy("id").orderBy(F.desc("commit_epoch"),
+                                                F.desc("revision"))
+            old = (self.history(nt.name)
+                   .withColumn("__rn", F.row_number().over(w))
+                   .filter(F.col("__rn") > 1))
+            if keep is not None:
+                old = old.filter(F.col("__rn") <= keep + 1)
+            (old.drop("__rn").write.mode("append")
+             .parquet(os.path.join(hist_path, f"{nt.kind}_{nt.name}")))
+        tmp = self._base_path(nt) + ".compacting"
+        cur.write.mode("overwrite").parquet(tmp)
+        final = self._base_path(nt)
+        # rename-aside swap (never rmtree-then-rename a live store —
+        # the ADVICE r6 rule): a crash between any two steps leaves
+        # old or new base intact; and with the log still present,
+        # merge-on-read over either base is identical (the per-id
+        # window re-derives the same latest rows), so the swap is
+        # crash-idempotent end to end
+        old = final + ".old"
+        shutil.rmtree(old, ignore_errors=True)
+        if os.path.exists(final):
+            os.rename(final, old)
+        os.rename(tmp, final)
+        shutil.rmtree(old, ignore_errors=True)
 
     # -- prolog-side mutation (retract) ---------------------------------------
 

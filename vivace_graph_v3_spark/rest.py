@@ -28,7 +28,9 @@ endpoints are bounded by ``max_rows`` before ``collect()``, so the JVM does
 the scan/join work and the HTTP process only ships a capped JSON payload.
 Point CRUD flows through the MVCC transaction log (one commit per request —
 the ``with-transaction`` analog), so OCC conflict detection, tombstones and
-time travel all apply to REST writers too. This is not the 100 TB data
+time travel all apply to REST writers too. A request resolves an id once,
+through :meth:`VersionedGraph.lookup` (one Spark job per type tried), not
+through the merge-on-read plan of a whole type. This is not the 100 TB data
 path — bulk loads go through Spark jobs — it is the operational surface the
 reference offers, kept faithfully thin.
 
@@ -287,20 +289,31 @@ class RestServer:
                           for t in store.edge_types()},
         }
 
-    def _find_type(self, vg: VersionedGraph, kind: str, node_id: str) -> str:
-        """Resolve which declared type holds this id (the reference's
-        store-wide lookup-vertex/lookup-edge, vertex.lisp:84-91)."""
+    @staticmethod
+    def _find(vg: VersionedGraph, kind: str, node_id: str):
+        """``(type name, newest row)`` of the declared type that holds this
+        id, deleted rows included, or None (the reference's store-wide
+        lookup-vertex/lookup-edge, vertex.lisp:84-91): one
+        :meth:`VersionedGraph.lookup` job per type tried, in registry
+        order."""
         for nt in vg.registry.types(kind):
-            if not vg.read(nt.name, include_deleted=True).filter(
-                    F.col("id") == node_id).isEmpty():
-                return nt.name
-        raise _HttpError(404, f"unknown {kind} '{node_id}'")
+            row = vg.lookup(nt.name, node_id)
+            if row is not None:
+                return nt.name, row
+        return None
+
+    def _find_type(self, vg: VersionedGraph, kind: str, node_id: str):
+        found = self._find(vg, kind, node_id)
+        if found is None:
+            raise _HttpError(404, f"unknown {kind} '{node_id}'")
+        return found
+
+    @staticmethod
+    def _node_json(tname: str, row) -> dict:
+        return _json_value(row.asDict(recursive=True)) | {"type": tname}
 
     def _get_node(self, vg, kind, node_id):
-        tname = self._find_type(vg, kind, node_id)
-        row = (vg.read(tname, include_deleted=True)
-               .filter(F.col("id") == node_id).first())
-        return _json_value(row.asDict(recursive=True)) | {"type": tname}
+        return self._node_json(*self._find_type(vg, kind, node_id))
 
     def _one_row_df(self, vg, nt, node_id: str, slots: dict, extra=None):
         fields = [T.StructField("id", T.StringType())]
@@ -326,8 +339,7 @@ class RestServer:
         node_id = params.get("id") or self._gen_id(type_name)
         # make-vertex retries on id collision (vertex.lisp:105-146); a
         # client-supplied duplicate is the client's error -> 409
-        if not vg.read(nt.name, include_deleted=True).filter(
-                F.col("id") == node_id).isEmpty():
+        if vg.lookup(nt.name, node_id) is not None:
             raise _HttpError(409, f"{kind} id '{node_id}' already exists")
         extra = None
         if kind == "edge":
@@ -336,9 +348,9 @@ class RestServer:
                 # rest.lisp:720-722
                 raise _HttpError(400,
                                  "You must provide both FROM and TO vertices")
-            store = vg.store()
-            if store.lookup_vertex(frm).isEmpty() or \
-                    store.lookup_vertex(to).isEmpty():
+            # either endpoint may be a tombstone (lookup-vertex semantics)
+            if self._find(vg, "vertex", frm) is None or \
+                    self._find(vg, "vertex", to) is None:
                 raise _HttpError(400,
                                  "You must provide both FROM and TO vertices")
             extra = {"src": T.StringType(), "dst": T.StringType(),
@@ -348,13 +360,12 @@ class RestServer:
             params["src"], params["dst"] = frm, to
         df = self._one_row_df(vg, nt, node_id, params, extra)
         vg.commit(vg.begin().create(nt.name, df))
-        return self._get_node(vg, kind, node_id)
+        return self._node_json(nt.name, vg.lookup(nt.name, node_id))
 
     def _update_node(self, vg, kind, node_id, params):
-        tname = self._find_type(vg, kind, node_id)
+        tname, cur = self._find_type(vg, kind, node_id)
         nt = vg.registry.get(tname)
-        cur = (vg.read(tname).filter(F.col("id") == node_id).first())
-        if cur is None:
+        if cur["deleted"]:
             raise _HttpError(404, f"{kind} '{node_id}' is deleted")
         merged = cur.asDict()
         for sname in nt.slots:
@@ -365,21 +376,26 @@ class RestServer:
         df = (self._one_row_df(vg, nt, node_id, merged, extra)
               .withColumn("revision", F.lit(cur["revision"]).cast("long")))
         vg.commit(vg.begin().save(tname, df))
-        return self._get_node(vg, kind, node_id)
+        return self._node_json(tname, vg.lookup(tname, node_id))
 
     def _delete_node(self, vg, kind, node_id):
-        tname = self._find_type(vg, kind, node_id)
+        tname, _ = self._find_type(vg, kind, node_id)
         vg.commit(vg.begin().mark_deleted(tname, [node_id]))
         return {"deleted": node_id, "type": tname}
 
     def _list_edges(self, vg, node_id):
-        # rest-list-edges (rest.lisp:749-762): out then in, active only
+        # rest-list-edges (rest.lisp:749-762): out then in, active only,
+        # each side capped at max_rows, both sides in one tagged action
         self._find_type(vg, "vertex", node_id)
         edges = vg.store().active_edges()
-        out = edges.filter(F.col("src") == node_id)
-        inc = edges.filter(F.col("dst") == node_id)
-        return {"out": _rows_json(out, self.max_rows),
-                "in": _rows_json(inc, self.max_rows)}
+        sides = [edges.filter(F.col(end) == node_id).limit(self.max_rows)
+                 .withColumn("__side", F.lit(side))
+                 for side, end in (("out", "src"), ("in", "dst"))]
+        listing = {"out": [], "in": []}
+        for r in sides[0].unionByName(sides[1]).collect():
+            row = r.asDict(recursive=True)
+            listing[row.pop("__side")].append(_json_value(row))
+        return listing
 
     def _named_query(self, vg, name, params):
         from vivace_graph_v3_spark.query.builder import EffectNotAllowed
